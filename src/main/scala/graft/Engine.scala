@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *     Spark's 200 — on a real cluster this would be ~2-3× total cores and
   *     AQE coalesces down; locally 200 tiny partitions only add overhead.
   *   - UTC session timezone so timestamp semantics match the DuckDB oracle.
-  *   - RocksDB state store for streaming state: the reference's keyed state
-  *     is an unbounded on-heap map (`NestedStateMap.java:41`, no spill, 5 MB
-  *     snapshot cap `MemoryStateBackend.java:48`); RocksDB gives spill +
-  *     incremental checkpoints at large key cardinality.
+  *   - In-memory (HDFS-backed) state store: a versioned heap map per
+  *     partition with delta checkpoints, the shape of the reference's
+  *     keyed state (`NestedStateMap.java:41`). RocksDB remains available
+  *     and is used where Spark requires it (GraftQuery.withRocksDBStateStore).
   */
 object Engine {
 
@@ -59,8 +59,9 @@ object Engine {
     // bucketed-table writes (q_join_bucketed) land here, not in cwd
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .config("spark.ui.enabled", "false")
+    // not RocksDB: JNI gets + put per key, flush + checkpoint per batch
     .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     // Checkpoint-file checksums OFF (r11 judge item #1): every streaming
     // checkpoint here is per-invocation tmpfs scratch (wiped on entry,
     // never restored across media failures — Streams.fresh), so checksum

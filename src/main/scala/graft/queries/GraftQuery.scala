@@ -27,10 +27,11 @@ object GraftQuery {
 
   /** Run `body` with a temporarily reduced shuffle-partition count, then
     * restore. For queries whose state is tiny relative to the session
-    * default (streaming state stores instantiate ONE RocksDB per shuffle
-    * partition; iterative loops pay per-stage scheduling on near-empty
-    * partitions). Results are partitioning-invariant by construction —
-    * asserted by the invariance tests. */
+    * default (a streaming query opens one state store per shuffle
+    * partition and commits each one every micro-batch; iterative loops
+    * pay per-stage scheduling on near-empty partitions). Results are
+    * partitioning-invariant by construction — asserted by the invariance
+    * tests. */
   def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A =
     withConfs(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
@@ -47,21 +48,13 @@ object GraftQuery {
     }
   }
 
-  /** In-memory (HDFS-backed) state store scoped to one streaming gate
-    * query: the right backend when per-partition state is tiny (these
-    * gates hold ≤ a few thousand keys TOTAL). RocksDB — the session
-    * default, and what a 100 TB deployment with large keyed state uses —
-    * pays a native-DB open + checkpoint per store per batch, which at
-    * kilobytes of state is pure overhead (a stream-stream join opens FOUR
-    * stores per partition). Sizing the backend to the state volume is the
-    * production decision; q_stream_wordcount keeps RocksDB to exercise
-    * that path in the gate. */
-  def withTinyStateStreaming[A](spark: SparkSession, partitions: Int)(body: => A): A =
-    withConfs(spark,
-      "spark.sql.shuffle.partitions" -> partitions.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    )(body)
+  /** The RocksDB state store for queries started in `body`, over the
+    * in-memory default of Engine.configure: the one place that selects
+    * it, around `transformWithState`, which Spark runs only on RocksDB.
+    * The checkpoint's offset log pins the provider for restarts. */
+  def withRocksDBStateStore[A](spark: SparkSession)(body: => A): A =
+    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Online-serve planning regime (r16): inside a broadcast-pinned
     * small-batch serve — every join hinted, every scan bucket-pruned,

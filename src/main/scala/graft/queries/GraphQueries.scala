@@ -215,7 +215,7 @@ object GraphQueries {
       import graft.streaming.{SnapshotStore, Streams}
       val name = Streams.fresh("stream_graph_cdc", dir)
       val snap = s"${Streams.scratchRoot}/graph/$name/snap"
-      val live = GraftQuery.withTinyStateStreaming(spark, 4) {
+      val live = GraftQuery.withShufflePartitions(spark, 4) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"),

@@ -1583,7 +1583,7 @@ object SimilarityQueries {
       val root = indexRoot("hnswstreamupsert", dir)
       seedFromBase(spark, dir, root)
       val name = Streams.fresh("stream_index_hnsw_upsert", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
@@ -1628,7 +1628,7 @@ object SimilarityQueries {
       seedFromBase(spark, dir, root)
       buildHierLayers(spark, root)
       val name = Streams.fresh("stream_index_hnsw_hier_fold", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
@@ -2709,7 +2709,7 @@ object SimilarityQueries {
     // carry bid= dirs outside this run's batch range
     PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
+    GraftQuery.withShufflePartitions(spark, 8) {
       val src = Streams.stagedFileStream(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 40)
@@ -2777,7 +2777,7 @@ object SimilarityQueries {
       Option(new java.io.File(out).listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.startsWith("bid="))
         .map(_.getName.stripPrefix("bid=").toLong).sorted
-    GraftQuery.withTinyStateStreaming(spark, 8) {
+    GraftQuery.withShufflePartitions(spark, 8) {
       def start() = Streams.fileStream(spark, srcDir, filesPerTrigger = 2)
         .writeStream.queryName(name)
         .option("checkpointLocation", Streams.ckpt(name))
@@ -2837,7 +2837,7 @@ object SimilarityQueries {
     // pid-recycling guard, as in streamServedIndex
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_hnsw_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
+    GraftQuery.withShufflePartitions(spark, 8) {
       val src = Streams.stagedFileStream(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 45)
@@ -2878,7 +2878,7 @@ object SimilarityQueries {
     val out = indexRoot("hnswhierstreamserve", dir)
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_hnsw_hier_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
+    GraftQuery.withShufflePartitions(spark, 8) {
       val src = Streams.stagedFileStream(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 45)
@@ -2952,7 +2952,7 @@ object SimilarityQueries {
     val marker = new java.io.File(
       s"$root/cells/_graft_staging_delete/_graft_touched")
     val name = Streams.fresh("stream_index_serve_maint", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
+    GraftQuery.withShufflePartitions(spark, 8) {
       val src = Streams.stagedFileStream(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 25 === 19)
@@ -3074,7 +3074,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/codes")
       val name = Streams.fresh("stream_index_pq", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") >= b)
@@ -3863,7 +3863,7 @@ object SimilarityQueries {
       seedFromIvfBase(spark, dir, root)
       val cents = spark.read.parquet(s"$root/centroids")
       val name = Streams.fresh("stream_index_upsert", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
@@ -7267,7 +7267,7 @@ object SimilarityQueries {
       import graft.streaming.Streams
       val name = Streams.fresh("stream_embed", dir)
       val root = s"${Streams.scratchRoot}/embed/$name"
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val c = vectors(spark, dir).filter(col("vec_id") < 16).select(
           col("vec_id").as("cent_id"), col("embedding").as("cemb"),
           col("norm2").as("cnorm2"))

@@ -102,7 +102,7 @@ object StreamQueries {
       val texts = Tables(spark, dir).documents
         .select("text").as[String].collect().toSeq
       // small keyed state: 8 state-store partitions instead of the session
-      // default (one RocksDB instance per shuffle partition)
+      // default (one store per shuffle partition, committed every batch)
       GraftQuery.withShufflePartitions(spark, 8) {
         Streams.wordCount(spark, Seq(texts), Streams.fresh("stream_wc", dir))
       }
@@ -134,7 +134,7 @@ object StreamQueries {
       // ~200 ms/batch) — measured invariant to store partition count
       // (11.6 s @ 2, 13.6 s @ 1 at sf0.1), so it is the trace SEMANTICS
       // (50 sequential batches), not a tunable, that sets the cost.
-      GraftQuery.withTinyStateStreaming(spark, 2) {
+      GraftQuery.withShufflePartitions(spark, 2) {
         Streams.wordCountLog(spark, texts, Streams.fresh("stream_updlog", dir))
       }
     },
@@ -160,7 +160,7 @@ object StreamQueries {
       val source = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, String, Double)]
       val name = Streams.fresh("stream_tumbling", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
       val q = source.toDF().toDF("ts", "event_type", "value")
         .withWatermark("ts", "1 minute")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -196,7 +196,7 @@ object StreamQueries {
          |FROM (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) events
          |GROUP BY win_start, event_type""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_filesrc", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).events
             .select(col("ts"), col("event_type"), col("value")),
@@ -266,7 +266,7 @@ object StreamQueries {
            |    '\b555-[0-9]{4}\b', '<PHONE>', 'g')) AS redacted_fp
            |FROM d""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_quality", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).documents.select(col("doc_id"), col("text")),
           name, files = 4)
@@ -325,7 +325,7 @@ object StreamQueries {
         |  CAST(SUM(i * i) AS BIGINT) AS sum_sq
         |FROM range(0, 60000) t(i) GROUP BY i % 7""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_custom", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = spark.readStream.format("graft-seq")
           .option("end", "60000").option("rowsPerBatch", "15000")
           .option("numPartitions", "8").load()
@@ -352,9 +352,9 @@ object StreamQueries {
     // yields rows — the typed-path analog of the decimal-sum rule — and
     // the final division is one IEEE op identical to the oracle's.
     // RocksDB backend BY REQUIREMENT (transformWithState only runs on
-    // the RocksDB provider — also the right 100 TB default), so this
-    // gate exercises the production store the tiny-state gates opt out
-    // of. Final state per key must equal the closed-form oracle.
+    // the RocksDB provider), scoped over the in-memory session default,
+    // so this gate exercises the RocksDB store. Final state per key must
+    // equal the closed-form oracle.
     "q_stream_tws" -> GraftQuery.sql(
       "transformWithState: typed ValueState running (count, sum) over the connector",
       """SELECT k % 100 AS key, COUNT(*) AS n,
@@ -380,17 +380,19 @@ object StreamQueries {
       }
       val name = Streams.fresh("stream_tws", dir)
       GraftQuery.withShufflePartitions(spark, 8) {
-        val q = spark.readStream.format("graft-seq")
-          .option("end", "40000").option("rowsPerBatch", "10000")
-          .option("numPartitions", "8").option("keys", "100").load()
-          .select(col("key"), col("value")).as[(Long, Double)]
-          .groupByKey(_._1)
-          .transformWithState(new RunningAgg, TimeMode.None(),
-            OutputMode.Update())
-          .toDF("key", "n", "s")
-          .writeStream.queryName(name).outputMode("update").format("memory")
-          .option("checkpointLocation", Streams.ckpt(name))
-          .start()
+        val q = GraftQuery.withRocksDBStateStore(spark) { // read at start()
+          spark.readStream.format("graft-seq")
+            .option("end", "40000").option("rowsPerBatch", "10000")
+            .option("numPartitions", "8").option("keys", "100").load()
+            .select(col("key"), col("value")).as[(Long, Double)]
+            .groupByKey(_._1)
+            .transformWithState(new RunningAgg, TimeMode.None(),
+              OutputMode.Update())
+            .toDF("key", "n", "s")
+            .writeStream.queryName(name).outputMode("update").format("memory")
+            .option("checkpointLocation", Streams.ckpt(name))
+            .start()
+        }
         q.processAllAvailable()
         q.stop()
         // n and s are monotone per key (nonnegative contributions), so
@@ -420,7 +422,7 @@ object StreamQueries {
         |FROM range(0, 20000) t(k) GROUP BY k % 7""".stripMargin) { (spark, dir) =>
       import CoreQueries.dsum
       val name = Streams.fresh("stream_dedup", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = spark.readStream.format("graft-seq")
           .option("end", "40000").option("rowsPerBatch", "10000")
           .option("numPartitions", "8").option("keys", "20000").load()
@@ -466,7 +468,7 @@ object StreamQueries {
         |GROUP BY k % 7""".stripMargin) { (spark, dir) =>
       import CoreQueries.dsum
       val name = Streams.fresh("stream_dedup_ttl", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = spark.readStream.format("graft-seq")
           .option("end", "40000").option("rowsPerBatch", "10000")
           .option("numPartitions", "8").option("keys", "20000").load()
@@ -506,7 +508,7 @@ object StreamQueries {
         |FROM range(0, 7200) t(k) GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
       import CoreQueries.dsum
       val name = Streams.fresh("stream_seq_window", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         val src = spark.readStream.format("graft-seq")
           .option("end", "10801").option("rowsPerBatch", "2700")
           .option("numPartitions", "8").option("keys", "5").load()
@@ -554,7 +556,7 @@ object StreamQueries {
       import spark.implicits._
       val far = farFuture(spark, dir)
       val name = Streams.fresh("stream_session", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
+      GraftQuery.withShufflePartitions(spark, 8) {
         // 2 data files (+ the sentinel trigger): cross-batch session
         // MERGING needs at least two data batches; more only multiplies
         // the per-trigger state-store floor at gate-sized state
@@ -611,7 +613,7 @@ object StreamQueries {
         t.customer.select(col("c_custkey"), col("c_mktsegment")))
       val nCust = dim.count()
       val name = Streams.fresh("stream_enrich", dir)
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         // 4 staged files × 2/trigger = 2 micro-batches: still exercises the
         // per-batch dim refresh (the semantics under test) at half the
         // per-trigger floor — same rate-knob shape as q_stream_sink_files
@@ -661,7 +663,7 @@ object StreamQueries {
       import graft.streaming.SnapshotStore
       val name = Streams.fresh("stream_cdc", dir)
       val snap = s"${Streams.scratchRoot}/cdc/$name/snap"
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"), col("user_id"),
@@ -715,7 +717,7 @@ object StreamQueries {
       import graft.streaming.SnapshotStore
       val name = Streams.fresh("stream_cdc_compact", dir)
       val snap = s"${Streams.scratchRoot}/cdc/$name/snap"
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"), col("user_id"),
@@ -825,7 +827,7 @@ object StreamQueries {
             .as("jb"))
         .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
         .agg(sum(col("wc")).as("c"))
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         var lastId = -1L
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).documents.select(col("doc_id"), col("text")),
@@ -917,7 +919,7 @@ object StreamQueries {
       val name = Streams.fresh("stream_ivm", dir)
       val root = s"${Streams.scratchRoot}/ivm/$name"
       val snap = s"$root/snap"
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         // 2 micro-batches: retraction maintenance is fully exercised by
         // any split (keys recur across batches, so old rows retract and
         // merged rows insert every batch); more batches only multiply
@@ -1026,7 +1028,7 @@ object StreamQueries {
       import CoreQueries.dsum
       val name = Streams.fresh("stream_sink", dir)
       val outPath = s"${Streams.scratchRoot}/sink/$name"
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("event_type"), col("value")),
@@ -1059,7 +1061,7 @@ object StreamQueries {
         |FROM documents""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_split", dir)
       val base = s"${Streams.scratchRoot}/split/$name"
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val src = Streams.stagedFileStream(spark,
           Tables(spark, dir).documents.select(col("doc_id"), col("text")),
           name, files = 4)
@@ -1119,7 +1121,7 @@ object StreamQueries {
       // keyWithIndexToValue), so store-init cost dominates at small state;
       // halving partitions halved wall-clock at sf0.1 with no skew risk at
       // this state size (production sizes this to state volume, as ever).
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val purchases = Streams.stagedFileStream(spark,
           ev.filter(col("event_type") === "purchase")
             .select(col("user_id"), col("ts").as("ts_p")),
@@ -1170,7 +1172,7 @@ object StreamQueries {
       // 2 partitions: TWO passes (data + sentinel) x 4 stores/partition
       // means store-commit count doubles vs the inner join; at this state
       // size fewer, fatter partitions win (measured 5.7 s @ 4, 5.2 s @ 2)
-      GraftQuery.withTinyStateStreaming(spark, 2) {
+      GraftQuery.withShufflePartitions(spark, 2) {
         // 1 data file per side: the outer join already pays a SECOND
         // full pass for the sentinel trigger (4 state stores commit per
         // partition per pass), so data-batch count is kept at one for
@@ -1229,7 +1231,7 @@ object StreamQueries {
       val name = Streams.fresh("stream_fojoin", dir)
       // 2 partitions for the same store-commit economics as the LEFT
       // OUTER gate (two passes × 4 stores/partition)
-      GraftQuery.withTinyStateStreaming(spark, 2) {
+      GraftQuery.withShufflePartitions(spark, 2) {
         // 1 data file per side — same store-commit parity rationale as
         // the LEFT OUTER gate (sentinel pass doubles commits already)
         val dirP = Streams.stage(ev.filter(col("event_type") === "purchase")
@@ -1292,7 +1294,7 @@ object StreamQueries {
         |  AND c.ts_c >= p.ts_p - INTERVAL 1 HOUR
         |  AND c.ts_c < p.ts_p""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_join_conn", dir)
-      GraftQuery.withTinyStateStreaming(spark, 4) {
+      GraftQuery.withShufflePartitions(spark, 4) {
         val q = connectorJoinStream(spark)
           .writeStream.queryName(name).outputMode("append").format("memory")
           .option("checkpointLocation", Streams.ckpt(name))

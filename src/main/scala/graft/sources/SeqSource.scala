@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -245,25 +246,26 @@ object SeqBatch {
 
 final case class SeqInputPartition(lo: Long, hi: Long) extends InputPartition
 
-/** Emits only the pruned fields, each a pure function of the index. The
-  * per-field closures are resolved ONCE per reader (not per row). */
+/** Emits only the pruned fields, each a pure function of the index, into
+  * ONE reused row (valid until the next `next()`, as DSv2 allows) through
+  * typed setters resolved once per reader: no per-row allocation or boxing. */
 final case class SeqReaderFactory(fields: Array[String], keys: Long)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SeqInputPartition]
-    val cols: Array[Long => Any] = fields.map {
-      case "id" => (i: Long) => i
-      case "ts" => (i: Long) => SeqSource.TS_BASE_MICROS + i * 1000000L
-      case "key" => (i: Long) => i % keys
-      case "value" => (i: Long) => (i % 1000L) / 10.0
-      case other => throw new IllegalArgumentException(
+    val row = new SpecificInternalRow(fields.map(SeqSource.SCHEMA(_).dataType).toSeq)
+    val setters: Array[Long => Unit] = fields.zipWithIndex.map {
+      case ("id", j) => (i: Long) => row.setLong(j, i)
+      case ("ts", j) => (i: Long) => row.setLong(j, SeqSource.TS_BASE_MICROS + i * 1000000L)
+      case ("key", j) => (i: Long) => row.setLong(j, i % keys)
+      case ("value", j) => (i: Long) => row.setDouble(j, (i % 1000L) / 10.0)
+      case (other, _) => throw new IllegalArgumentException(
         s"graft-seq: unknown column '$other'")
     }
     new PartitionReader[InternalRow] {
       private var cur = p.lo - 1
       override def next(): Boolean = { cur += 1; cur < p.hi }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(cols.map(f => f(cur)).toIndexedSeq)
+      override def get(): InternalRow = { setters.foreach(_(cur)); row }
       override def close(): Unit = ()
     }
   }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * (`MailboxProcessor.java:158`); the Spark-native equivalent is
   * micro-batch execution — each trigger re-runs the incremental plan and
   * the state store carries keyed state across batches
-  * (≙ HeapKeyedStateBackend, but spillable/checkpointable RocksDB here,
-  * required at 100 TB key cardinality).
+  * (≙ HeapKeyedStateBackend: a versioned heap map with delta checkpoints;
+  * RocksDB remains available and is used where Spark requires it).
   */
 object Streams {
 

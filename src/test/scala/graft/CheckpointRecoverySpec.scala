@@ -67,7 +67,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with TestSession {
     val events = Tables(spark, sfDir).events
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
-    GraftQuery.withTinyStateStreaming(spark, 4) {
+    GraftQuery.withShufflePartitions(spark, 4) {
       // wave 1 staged; wave 2 arrives while the query is DOWN
       val srcDir = Streams.stage(events.filter(col("event_id") % 2 === 0),
         name, files = 2)

@@ -193,7 +193,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     val mid = incIds.toSeq.sorted.apply(incIds.size / 2)
     val srcDir = Streams.stage(inc.filter(col("vec_id") < mid), name, files = 2)
     def runStream(): Unit = graft.queries.GraftQuery
-      .withTinyStateStreaming(spark, 8) {
+      .withShufflePartitions(spark, 8) {
       val q = Streams.fileStream(spark, srcDir, filesPerTrigger = 1)
         .writeStream.queryName(name)
         .option("checkpointLocation", Streams.ckpt(name))

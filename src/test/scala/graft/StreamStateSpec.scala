@@ -29,7 +29,7 @@ class StreamStateSpec extends AnyFunSuite {
       .map(s => (s.numRowsTotal, s.numRowsUpdated, s.numRowsRemoved))
 
   test("dedup-TTL state is bounded by the watermark and evicted, not key-space-sized") {
-    GraftQuery.withTinyStateStreaming(spark, 4) {
+    GraftQuery.withShufflePartitions(spark, 4) {
       val name = Streams.fresh("state_dedup_ttl", "spec")
       // q_stream_dedup_ttl's exact feed: [0, 40000) as 4 batches, keys
       // replayed after a full key-space pass, 3000 s watermark delay
@@ -68,7 +68,7 @@ class StreamStateSpec extends AnyFunSuite {
   }
 
   test("connector-driven interval join holds O(interval) state, not stream history") {
-    GraftQuery.withTinyStateStreaming(spark, 4) {
+    GraftQuery.withShufflePartitions(spark, 4) {
       val name = Streams.fresh("state_join_conn", "spec")
       // the q_stream_join_connector stream: 600 purchases + 1440 clicks
       // over [0, 7200) s, 1-hour join interval, 1-minute watermark

@@ -32,9 +32,10 @@ class StreamingSpec extends AnyFunSuite with TestSession {
   }
 
   test("transformWithState: running count with typed ValueState (Spark 4 API)") {
-    // the modern arbitrary-state API (successor of flatMapGroupsWithState,
-    // RocksDB-backed — the session default provider): a per-key ValueState
-    // running count, update emission, state persisting across batches.
+    // the modern arbitrary-state API (successor of flatMapGroupsWithState):
+    // a per-key ValueState running count, update emission, state
+    // persisting across batches. Spark runs it only on RocksDB, so the
+    // query starts inside the RocksDB scope over the in-memory default.
     import org.apache.spark.sql.{Encoders, functions => F}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
     import spark.implicits._
@@ -57,17 +58,19 @@ class StreamingSpec extends AnyFunSuite with TestSession {
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String]
     val name = Streams.fresh("tws", sfDir)
-    val q = source.toDS()
-      .flatMap(_.toLowerCase.split("\\W+").toSeq).filter(_.length >= 4)
-      .groupByKey(identity)
-      .transformWithState(new RunningCount, TimeMode.None(), OutputMode.Update())
-      .toDF("word", "cnt")
-      .writeStream.queryName(name).outputMode("update").format("memory")
-      // ckpt(name) lives under the scratch root that fresh(name) wiped —
-      // a stable name over an UNwiped checkpoint would resume the finished
-      // query on the next run and emit nothing
-      .option("checkpointLocation", Streams.ckpt(name))
-      .start()
+    val q = graft.queries.GraftQuery.withRocksDBStateStore(spark) {
+      source.toDS()
+        .flatMap(_.toLowerCase.split("\\W+").toSeq).filter(_.length >= 4)
+        .groupByKey(identity)
+        .transformWithState(new RunningCount, TimeMode.None(), OutputMode.Update())
+        .toDF("word", "cnt")
+        .writeStream.queryName(name).outputMode("update").format("memory")
+        // ckpt(name) lives under the scratch root that fresh(name) wiped —
+        // a stable name over an UNwiped checkpoint would resume the finished
+        // query on the next run and emit nothing
+        .option("checkpointLocation", Streams.ckpt(name))
+        .start()
+    }
     source.addData("hello spark hello")
     q.processAllAvailable()
     source.addData("hello again")
