@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
-"""Fold the round-16 sf0.1 sweeps into the closing BASELINE table:
-per-gate MINIMUM across the round's full sweeps (the r14 discipline —
-external host steal inflates individual sweeps by 1.5-2x with flat
-gc_ms, so the min across sweeps is the honest uncontended estimate).
+"""Fold Bench sweeps into a BASELINE table: per-gate MINIMUM across the
+given bench_report JSONs (external host steal inflates individual sweeps
+by 1.5-2x with flat gc_ms, so the min across sweeps is the honest
+uncontended estimate).
 
-Robust to partial sweeps (ADVICE r15 #5): non-numeric values (null from
-a failed/partial gate) are skipped rather than crashing the fold, and
-per-gate sweep coverage is reported so a gate folded from fewer sweeps
-than advertised is visible instead of silently blending in.
+Robust to partial sweeps: non-numeric values (null from a failed/partial
+gate) are skipped rather than crashing the fold, and per-gate sweep
+coverage is reported so a gate folded from fewer sweeps than advertised
+is visible instead of silently blending in.
 
-Usage: fold_bench_r16.py report1.json report2.json ... > table.md
+Usage: python3 scripts/fold_bench.py report1.json report2.json ... > table.md
 """
 import json
 import numbers

@@ -2,28 +2,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Round-16 plan evidence: writes `plans/r16/<name>_<suffix>.txt` with the
-  * `.explain("formatted")` output of the named queries at the given sf dir
-  * (default sf0.1 — the bench's scale, so size-driven strategy choices
-  * match the measured numbers). Same tool as PlanDumpR15, pointed at the
-  * round-16 evidence dir.
+/** Optimization-round plan evidence: writes `<outDir>/<name>_<suffix>.txt`
+  * with the `.explain("formatted")` output of the named queries at the
+  * given sf dir (default sf0.1 — the bench's scale, so size-driven
+  * strategy choices match the measured numbers).
   *
-  * Usage: runMain graft.PlanDumpR16 <suffix> [q_a,q_b,...]
+  * Usage: runMain graft.PlanDumpDir <outDir> [suffix] [q_a,q_b,...]
+  * (e.g. `plans/r16 after`; suffix defaults to `before`). With no query
+  * list, dumps every declared query (streaming/iterative gates whose
+  * run() executes jobs eagerly still produce their final frame's plan —
+  * the serve/read side, which is what a round's claims are about).
   */
-object PlanDumpR16 {
+object PlanDumpDir {
   def main(args: Array[String]): Unit = {
-    val suffix = args.headOption.getOrElse("before")
+    require(args.nonEmpty, "usage: PlanDumpDir <outDir> [suffix] [q_a,q_b,...]")
+    val out = Paths.get(args(0))
+    val suffix = args.lift(1).getOrElse("before")
     val names =
-      if (args.length > 1) args(1).split(",").toSeq
+      if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = Engine.ready(Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("plan-dump-r16"),
+      SparkSession.builder().master(s"local[$cpus]").appName("plan-dump-dir"),
       cpus).getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    val out = Paths.get("plans/r16")
     Files.createDirectories(out)
     names.foreach { name =>
       try {

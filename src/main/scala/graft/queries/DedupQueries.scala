@@ -91,11 +91,9 @@ object DedupQueries {
   // all three. On a cluster the equivalent is writing the hashed-shingle
   // table to storage once per corpus — the first step of every production
   // dedup pipeline — so the single-node shortcut mirrors the real design.
-  // INVARIANT (ADVICE r2): keyed by (session, dir), never auto-evicts —
-  // fine for the bench/verify harness (immutable sf dirs, one process);
-  // long-lived sessions over changing data should call clearCache().
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // INVARIANT (ADVICE r2): keyed by (session, dir), never evicted (see
+  // [[Memo]]) — each sf dir's parquet is immutable within one process.
+  private val shingleCache = new Memo[(SparkSession, String), DataFrame]
 
   // Memoized LSH band table for the embedding near-dup path: slim
   // (vec_id, band, bk) longs, 8 rows per vector, derived from the
@@ -103,18 +101,7 @@ object DedupQueries {
   // both join sides) re-runs the interpreted 32-bit signature fold; the
   // checkpoint also pins the subtree so the self-join references ONE
   // materialization instead of recomputing per side.
-  private val bandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop all memoized shingle/band tables. Companion to
-    * SimilarityQueries.clearCache for long-lived sessions. NOT a
-    * synchronous free: both tables are localCheckpoint-backed, so their
-    * RDD blocks are only released by the ContextCleaner once the dropped
-    * references are GC'd (same caveat as SimilarityQueries' q8 entries —
-    * there is no eager unpersist for checkpoint blocks held by a live
-    * plan). Gate-private scratch has the opposite lifecycle: tracked by
-    * [[Scratch]] and freed synchronously per query. */
-  def clearCache(): Unit = { shingleCache.clear(); bandCache.clear() }
+  private val bandCache = new Memo[(SparkSession, String), DataFrame]
 
   /** Min-label propagation over a SYMMETRIC edge table (a, b) → one
     * (id, lab) row per node, lab = min node id in the component.
@@ -181,7 +168,7 @@ object DedupQueries {
   }
 
   private def shingleDf(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((spark, dir),
+    shingleCache((spark, dir))(
       Tables(spark, dir).documents
         // native digest loop (ShingleHashes) ≡ the oracle's HSH_SQL:
         // sort(distinct(md5-prefix hash)) over the distinct 3-word shingles
@@ -856,7 +843,7 @@ object DedupQueries {
           |  acc + CASE WHEN CAST(element_at(embedding, CAST(2*i + 1 AS INT)) AS DOUBLE)
           |               > CAST(element_at(embedding, CAST(2*i + 2 AS INT)) AS DOUBLE)
           |             THEN shiftleft(1L, CAST(i AS INT)) ELSE 0L END) AS BIGINT)""".stripMargin)
-      val bands = bandCache.getOrElseUpdate((spark, dir), v
+      val bands = bandCache((spark, dir))(v
         .select(col("vec_id"), sig32.as("s"))
         .select(col("vec_id"),
           explode(sequence(lit(0), lit(7))).as("band"), col("s"))

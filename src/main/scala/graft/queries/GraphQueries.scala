@@ -39,8 +39,7 @@ object GraphQueries {
     * per (session, dir) and persist (SimilarityQueries.vecCache pattern;
     * persist keeps planner stats, eager count beats concurrent misses).
     * Src-keyed repartition pre-positions the rounds' join side. */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val edgeCache = new Memo[(SparkSession, String), DataFrame]
 
   /** Per-session cap on cached edge graphs (ADVICE r6): a long-lived
     * session sweeping many scale dirs would otherwise accumulate a
@@ -50,18 +49,13 @@ object GraphQueries {
     * the DataFrame handle stays valid and would lazily recompute). */
   private val EDGE_CACHE_MAX_PER_SESSION = 4
 
-  /** Drop all memoized edge graphs (long-lived sessions / changed data;
-    * mirrors SimilarityQueries.clearCache). */
-  def clearCache(): Unit = {
-    edgeCache.values.foreach(_.unpersist(blocking = false))
-    edgeCache.clear()
-  }
-
   private def tradeEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((spark, dir), {
-      val sessionKeys = edgeCache.keys.filter(_._1 eq spark).toSeq
+    edgeCache((spark, dir)) {
+      // the memo already holds this build's own key: count the others
+      val sessionKeys =
+        edgeCache.keys.filter(k => (k._1 eq spark) && k._2 != dir).toSeq
       if (sessionKeys.size >= EDGE_CACHE_MAX_PER_SESSION)
-        // TrieMap iteration order is stable enough for "evict one"; exact
+        // map iteration order is stable enough for "evict one"; exact
         // LRU is overkill for a cache whose hot set is one dir per run
         sessionKeys.headOption.foreach { k =>
           edgeCache.remove(k).foreach(_.unpersist(blocking = false))
@@ -79,7 +73,7 @@ object GraphQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
+    }
 
   /** Scaled-long PageRank (d=0.85, 5 synchronous iterations) over a
     * doubled (undirected) edge list: r0 = S/N; r' = ((15·S/100)/N) +

@@ -35,15 +35,14 @@ object PipelineQueries {
   // previous RDD copy in block-manager storage until GC
   // keyed by (session, dir, gram width): q_decontaminate uses 4-grams,
   // q_decontaminate_bloom 5-grams
-  private val gramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+  private val gramCache = new Memo[(SparkSession, String, Int), DataFrame]
 
   /** Exploded (doc_id, k-gram hash) pairs, distinct per doc, memoized +
     * localCheckpointed once per (session, dir, k) — both the eval side and
     * the corpus side of each decontamination gate read this one
     * materialization (see the q_decontaminate comment). */
   private def grams(spark: SparkSession, dir: String, k: Int): DataFrame =
-    gramCache.getOrElseUpdate((spark, dir, k), {
+    gramCache((spark, dir, k)) {
       val ws = filter(split(lower(col("text")), "\\W+"), w => w =!= "")
       Tables(spark, dir).documents
         .select(col("doc_id"), ws.as("ws"))
@@ -52,10 +51,7 @@ object PipelineQueries {
           explode(call_function("shingle_hashes", col("ws"), lit(k))).as("h"))
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
-    })
-
-  /** Drop memoized gram tables (companion of DedupQueries.clearCache). */
-  def clearCache(): Unit = gramCache.clear()
+    }
 
   /** 8-bit bucket from the md5 of a BIGINT id rendered as decimal text —
     * both engines hash the identical byte string. */

@@ -18,9 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * records exactly the RDDs the call materialized; the harness (Bench,
   * Verify, the smoke suite) calls [[release]] after each gate's action
   * completes, unpersisting them synchronously instead of waiting for GC.
-  * The five long-lived corpus caches (shingle/band/gram/vec/q8) bypass
-  * this on purpose — they are the memoized tables a cluster pipeline
-  * would write to storage once per corpus, and stay resident by design.
+  * The session-keyed [[Memo]] builds (the shingle/band/gram/vec/q8
+  * corpus frames and the rest) bypass this on purpose — they are the
+  * tables a cluster pipeline would write to storage once per corpus,
+  * and stay resident by design.
   *
   * Released frames must not be re-executed: a locally-checkpointed RDD's
   * blocks are its ONLY copy (lineage is truncated), so `release` is
@@ -57,11 +58,11 @@ object Scratch {
     * calls can never attribute each other's RDD. Eager mode registers
     * lazily INSIDE the lock (no job) and materializes OUTSIDE it, so
     * concurrent eager checkpoints still overlap their compute. A
-    * concurrent non-Scratch persist (the five long-lived memo caches)
+    * concurrent non-Scratch persist (a [[Memo]] build's corpus frame)
     * could in principle land inside the microseconds-wide diff window
-    * of another thread; those caches are created once under their own
-    * memoization locks before any overlapped serve runs, so the window
-    * is not reachable in practice. */
+    * of another thread; each key's build runs once, under its [[Memo]]
+    * lock, before any overlapped serve uses it, so the window is not
+    * reachable in practice. */
   private def track(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val out = synchronized {

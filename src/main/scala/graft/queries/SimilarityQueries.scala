@@ -61,65 +61,18 @@ object SimilarityQueries {
     * stats-less LogicalRDD demotes non-equi joins to CartesianProduct —
     * and an immediate count() populates the cache before a join's
     * concurrently-submitted stages can each miss and recompute. */
-  // INVARIANT (ADVICE r2): entries are keyed by (session, dir) and never
-  // auto-evict — correct for the single-process bench/verify harness where
-  // each sf dir's parquet is immutable, but a long-lived session that
-  // rewrites a dir's files or touches many dirs should call clearCache().
-  private val vecCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // INVARIANT (ADVICE r2): keyed by (session, dir), never evicted (see
+  // [[Memo]]) — each sf dir's parquet is immutable within one process.
+  private val vecCache = new Memo[(SparkSession, String), DataFrame]
 
   // Memoized int8-quantized corpus for q_sim_quantized: without it the
   // quantization lineage (corpus scan + global-max agg + per-row floor
   // transform) evaluates once per JOIN SIDE per run. localCheckpoint pins
   // one materialization, like DedupQueries' band table.
-  private val q8Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop all memoized corpora. persist-backed entries unpersist
-    * immediately; localCheckpoint-backed entries (q8) release their RDD
-    * blocks via the ContextCleaner once the dropped reference is GC'd —
-    * there is no synchronous free for checkpoint blocks. For long-lived
-    * sessions / changed source data; the bench harness never needs it. */
-  def clearCache(): Unit = {
-    vecCache.values.foreach(df => df.unpersist(blocking = false))
-    vecCache.clear()
-    q8Cache.clear()
-    hnswCache.values.foreach { case (a, b, c) =>
-      Seq(a, b, c).foreach(_.unpersist(blocking = false))
-    }
-    hnswCache.clear()
-    // path memos: clearing makes the next touch rebuild (overwrite) the
-    // on-disk index — required after source-data rewrites
-    bucketCountCache.clear()
-    persistedIvfCache.clear()
-    upsertIvfCache.clear()
-    trainedIvfCache.clear()
-    deletedIvfCache.clear()
-    compactIvfCache.clear()
-    streamUpsertCache.clear()
-    retrainCache.values.foreach { case (_, a, b) =>
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
-    }
-    retrainCache.clear()
-    foldCache.clear()
-    filteredIvfCache.clear()
-    filteredPlannerCache.clear()
-    pqIndexCache.clear()
-    plannerCache.clear()
-    serveMaintTraceCache.clear()
-    streamPqCache.clear()
-    foldPqCache.clear()
-    retrain2Cache.clear()
-    hnswIndexPathCache.clear()
-    hierHnswCache.clear()
-    hnswStreamUpsertCache.clear()
-    hnswDeleteCache.clear()
-    hnswUpsertCache.clear()
-    hnswRepairCache.clear()
-  }
+  private val q8Cache = new Memo[(SparkSession, String), DataFrame]
 
   private[queries] def vectors(spark: SparkSession, dir: String): DataFrame =
-    vecCache.getOrElseUpdate((spark, dir), {
+    vecCache((spark, dir)) {
       val df = Tables(spark, dir).embeddings
         .select(
         // label rides along (one int per row): q_knn_predict needs it, and
@@ -131,7 +84,7 @@ object SimilarityQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
+    }
 
   /** Nearest-centroid assignment (16 seed cells, exact cosine, ties to
     * the smallest cent_id) for every corpus vector: (vec_id, cent_id).
@@ -676,13 +629,13 @@ object SimilarityQueries {
     * it. persist (not Scratch.checkpoint) + eager count: the cached
     * frames must SURVIVE gate completion, and the eager materialization
     * decouples them from hnswIndex's gate-scoped checkpoint blocks. */
-  private val hnswCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+  private val hnswCache =
+    new Memo[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
 
   private def hnswPrepared(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val v = vectors(spark, dir)
-    val (q, hub, adj) = hnswCache.getOrElseUpdate((spark, dir), {
+    val (q, hub, adj) = hnswCache((spark, dir)) {
       val (asg, hub0, adj0) = hnswIndex(spark, dir)
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -694,7 +647,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
             col("norm2").as("qnorm2"), col("cent_id"))),
         mat(hub0), mat(adj0))
-    })
+    }
     (v, q, hub, adj)
   }
 
@@ -757,15 +710,14 @@ object SimilarityQueries {
   // over the sb/nb buckets (delete = drop the node's payload +
   // adjacency rows in their buckets' partitions).
 
-  private val hnswIndexPathCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswIndexPathCache = new Memo[(SparkSession, String), String]
 
   /** Memoized: build the navigable graph once (hnswIndex) and persist
     * routing + hubs + bucketed adjacency + bucketed node payloads;
     * returns the root. */
   private[graft] def persistedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswIndexPathCache.getOrElseUpdate((spark, dir), {
+    hnswIndexPathCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("hnswindex", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -798,7 +750,7 @@ object SimilarityQueries {
         .repartition(col("nb"))
         .write.mode("overwrite").partitionBy("nb").parquet(s"$root/nodes")
       root
-    })
+    }
 
   /** Beam serve over the persisted graph: enter at the hub of each
     * query's routed cell, then 4 hops of expand → score → keep top
@@ -1040,7 +992,7 @@ object SimilarityQueries {
   // graph tier, gated at two corpus slices.
 
   private val hierHnswCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+    new Memo[(SparkSession, String), (String, String)]
 
   /** Build one slice's flat graph layout + the two layer tables at
     * `root`: entryhubs (eh, eemb, enorm2 — S rows, read first) and
@@ -1118,7 +1070,7 @@ object SimilarityQueries {
     * first-half) — the q_sim_ivf_cells dial on the graph tier. */
   private[graft] def hierHnswIndexes(spark: SparkSession,
       dir: String): (String, String) =
-    hierHnswCache.getOrElseUpdate((spark, dir), {
+    hierHnswCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val v = vectors(spark, dir)
       val rootF = indexRoot("hnswhierfull", dir)
@@ -1132,9 +1084,7 @@ object SimilarityQueries {
       // that root is never mutated after its memoized build — r16,
       // VERDICT r15 item #1): copy them and derive only the two layer
       // tables, instead of re-running the engine's most expensive
-      // build a second time. Memoized build forced on THIS thread —
-      // TrieMap.getOrElseUpdate is not atomic, so racing it from the
-      // Future could double-build.
+      // build a second time.
       val base = persistedHnswIndex(spark, dir)
       // independent derivations at disjoint roots — overlap the two
       // jobs' tails from two driver threads (guide §2.6)
@@ -1151,7 +1101,7 @@ object SimilarityQueries {
       val bH = Future(buildHierHnswIndex(spark, half, rootH))
       Await.result(bF, Duration.Inf); Await.result(bH, Duration.Inf)
       (rootF, rootH)
-    })
+    }
 
   /** The hierarchical entry frame: scan the S-row layer-1 table, pick
     * each query's entry group, read ONLY those groups' layer-0
@@ -1359,8 +1309,7 @@ object SimilarityQueries {
     rounds
   }
 
-  private val hierMaintCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hierMaintCache = new Memo[(SparkSession, String), String]
 
   /** Memoized worn-hier scenario: full hier build, hard delete of
     * vec_id%10=3 with dead-hub repair (which overwrites `hubs` and
@@ -1368,7 +1317,7 @@ object SimilarityQueries {
     * fixed point; returns the root. */
   private[graft] def hierMaintIndex(spark: SparkSession,
       dir: String): String =
-    hierMaintCache.getOrElseUpdate((spark, dir), {
+    hierMaintCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("hnswhiermaint", dir)
       // the pristine full-corpus hier layout is hierHnswIndexes' first
@@ -1387,7 +1336,7 @@ object SimilarityQueries {
         vectors(spark, dir).filter(!delPredicate), buckets)
       resolveHierStaleness(spark, root)
       root
-    })
+    }
 
   // ---- streaming upsert into the graph tier (r12 judge item #6): the
   // q_stream_index_upsert landing discipline over q_sim_index_hnsw_
@@ -1412,13 +1361,11 @@ object SimilarityQueries {
     * but not centroids. Counting it from parquet per serve / per
     * micro-batch was one fixed-cost job each time (guide §1.2 per-task
     * work): the graph serves, the streaming landings, and every
-    * maintenance pass all start with this number. Cleared with the other
-    * memos by [[clearCache]]. */
-  private val bucketCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+    * maintenance pass all start with this number. */
+  private val bucketCountCache = new Memo[(SparkSession, String), Long]
 
   private[graft] def graphBuckets(spark: SparkSession, root: String): Long =
-    bucketCountCache.getOrElseUpdate((spark, root),
+    bucketCountCache((spark, root))(
       spark.read.parquet(s"$root/centroids").count())
 
   /** Invalidate — and, when the count is already known (layout copies:
@@ -1429,8 +1376,10 @@ object SimilarityQueries {
     * the one count job each scenario copy used to pay on first touch. */
   private def resetBuckets(spark: SparkSession, root: String,
       known: Option[Long] = None): Unit = {
-    bucketCountCache.remove((spark, root))
-    known.foreach(n => bucketCountCache.put((spark, root), n))
+    known match {
+      case Some(n) => bucketCountCache.put((spark, root), n)
+      case None => bucketCountCache.remove((spark, root))
+    }
   }
 
   /** Base adjacency ∪ landed edge generations (both sb-bucketed, so a
@@ -1567,8 +1516,7 @@ object SimilarityQueries {
     sbs
   }
 
-  private val hnswStreamUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswStreamUpsertCache = new Memo[(SparkSession, String), String]
 
   /** Memoized: base graph build (vec_id%10<>9) + streamed landing of
     * the %10=9 arrivals (4 staged files, 2 per trigger -> 2
@@ -1578,7 +1526,7 @@ object SimilarityQueries {
     * planner's (IndexMaintenanceSpec drives the fold + redelivery). */
   private[graft] def streamUpsertedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswStreamUpsertCache.getOrElseUpdate((spark, dir), {
+    hnswStreamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("hnswstreamupsert", dir)
       seedFromBase(spark, dir, root)
@@ -1599,10 +1547,9 @@ object SimilarityQueries {
         q.stop()
       }
       root
-    })
+    }
 
-  private val hierStreamFoldCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hierStreamFoldCache = new Memo[(SparkSession, String), String]
 
   /** Memoized: the hier tier driven from the STREAMING fold path (r13
     * judge item #5 — the layer tables previously only healed via the
@@ -1619,7 +1566,7 @@ object SimilarityQueries {
     * hubs)), which is what the gate's oracle states. */
   private[graft] def streamFoldedHierIndex(spark: SparkSession,
       dir: String): String =
-    hierStreamFoldCache.getOrElseUpdate((spark, dir), {
+    hierStreamFoldCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("hnswhierfold", dir)
       // hier-over-base-slice = the shared base layout + the two layer
@@ -1660,7 +1607,7 @@ object SimilarityQueries {
       require(p3.actions.isEmpty,
         s"graph+hier maintenance did not converge: $p3")
       root
-    })
+    }
 
   // ---- delete propagation + graph repair on the persisted HNSW
   // layout (r11): the graph index is the hard delete case — removing a
@@ -1680,8 +1627,7 @@ object SimilarityQueries {
   // edges keep their build-time ranks (no re-kNN here — that is
   // [[repairHnswGraph]]'s job, gated by q_sim_index_hnsw_repair).
 
-  private val hnswDeleteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswDeleteCache = new Memo[(SparkSession, String), String]
 
   /** The graph tier's node hard-delete core, shared by the delete gate
     * and the repair scenario: remove the delete set's payload rows and
@@ -1721,7 +1667,7 @@ object SimilarityQueries {
     * cells whose hub died; returns the root (memoized). */
   private[graft] def deletedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswDeleteCache.getOrElseUpdate((spark, dir), {
+    hnswDeleteCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       import org.apache.spark.sql.expressions.Window
       val root = indexRoot("hnswdeleted", dir)
@@ -1736,7 +1682,7 @@ object SimilarityQueries {
       repairDeadHubs(spark, root, del,
         vectors(spark, dir).filter(!delPredicate), buckets)
       root
-    })
+    }
 
   /** Hub repair after a node delete, shared by the delete gate and the
     * hier-maintenance scenario: re-elect ONLY the cells whose hub died
@@ -1810,8 +1756,7 @@ object SimilarityQueries {
   // buckets; every pre-existing file stays byte-identical
   // (spec-pinned).
 
-  private val hnswUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswUpsertCache = new Memo[(SparkSession, String), String]
 
   /** Build the BASE graph (vec_id%10<>9) as a persisted layout at
     * `root` — nodes carry their cent_id so insert candidate generation
@@ -1889,8 +1834,7 @@ object SimilarityQueries {
       .write.mode("append").partitionBy("nb").parquet(s"$root/nodes")
   }
 
-  private val hnswBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswBaseCache = new Memo[(SparkSession, String), String]
 
   /** Memoized SHARED base layout over the vec_id%10<>9 slice. Four
     * scenario roots (upsert, stream-upsert, repair-via-upsert,
@@ -1905,13 +1849,13 @@ object SimilarityQueries {
     * same bytes. */
   private[graft] def baseHnswLayout(spark: SparkSession,
       dir: String): String =
-    hnswBaseCache.getOrElseUpdate((spark, dir), {
+    hnswBaseCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("hnswbase", dir)
       PartitionedStore.removeTree(new java.io.File(root))
       buildBaseHnswIndex(spark, dir, root)
       root
-    })
+    }
 
   /** Wipe `root` and seed it with a copy of the shared base layout
     * (bucket-count memo seeded from the source's — a copy's centroid
@@ -1931,12 +1875,12 @@ object SimilarityQueries {
     * idempotent — reps must not re-run); returns the root. */
   private[graft] def upsertedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswUpsertCache.getOrElseUpdate((spark, dir), {
+    hnswUpsertCache((spark, dir)) {
       val root = indexRoot("hnswupsert", dir)
       seedFromBase(spark, dir, root)
       upsertHnswIncoming(spark, dir, root)
       root
-    })
+    }
 
   // ---- periodic graph repair + graph-tier planner (r12, closing r11
   // Missing #2/#4): both maintenance docs above defer new-new links,
@@ -2116,9 +2060,8 @@ object SimilarityQueries {
     }
   }
 
-  private val hnswRepairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (String, GraphMaintenancePlan, GraphMaintenancePlan)]
+  private val hnswRepairCache = new Memo[(SparkSession, String),
+    (String, GraphMaintenancePlan, GraphMaintenancePlan)]
 
   /** Memoized repair scenario: base graph + upsert wave (%10=9) +
     * delete wave (%10=3, payload/edges only — entry refresh is the
@@ -2126,7 +2069,7 @@ object SimilarityQueries {
     * post); the spec pins the wear signals and their convergence. */
   private[graft] def repairedHnswIndex(spark: SparkSession,
       dir: String): (String, GraphMaintenancePlan, GraphMaintenancePlan) =
-    hnswRepairCache.getOrElseUpdate((spark, dir), {
+    hnswRepairCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("hnswrepair", dir)
       // base + upsert wave is exactly the COMPLETED upsert scenario's
@@ -2143,7 +2086,7 @@ object SimilarityQueries {
       val pre = planGraphMaintenance(spark, root)
       runGraphMaintenance(spark, root, pre)
       (root, pre, planGraphMaintenance(spark, root))
-    })
+    }
 
   // ===== index-scale dial: cells ∝ √n (r7 judge item #5) =================
   //
@@ -2290,12 +2233,11 @@ object SimilarityQueries {
     * once, return its root path. The write cost is paid on first touch
     * (measured by the bench's first rep); every later serve reads the
     * persisted copy. */
-  private val persistedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val persistedIvfCache = new Memo[(SparkSession, String), String]
 
   private[graft] def persistedIvfIndex(spark: SparkSession,
       dir: String): String =
-    persistedIvfCache.getOrElseUpdate((spark, dir), {
+    persistedIvfCache((spark, dir)) {
       val v = vectors(spark, dir)
       val root = indexRoot("ivfindex", dir)
       val nn = v.agg(count(lit(1)).as("n"))
@@ -2308,7 +2250,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/cells")
       root
-    })
+    }
 
   /** Nearest-centroid assignment of `slice` against an explicit
     * centroid frame (cent_id, cemb, cnorm2): (vec_id, cent_id). The
@@ -2337,11 +2279,9 @@ object SimilarityQueries {
   // append partitioned by cent_id — cost O(incoming), untouched cell
   // dirs keep their files byte-identical (RecallSpec pins it).
 
-  private val upsertIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val upsertIvfCache = new Memo[(SparkSession, String), String]
 
-  private val ivfBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val ivfBaseCache = new Memo[(SparkSession, String), String]
 
   /** Memoized SHARED IVF base layout — the upsert/compact/stream-upsert
     * scenario roots copy this instead of recomputing the identical
@@ -2349,12 +2289,12 @@ object SimilarityQueries {
     * Never served from or mutated after build. */
   private[graft] def baseIvfLayout(spark: SparkSession,
       dir: String): String =
-    ivfBaseCache.getOrElseUpdate((spark, dir), {
+    ivfBaseCache((spark, dir)) {
       val root = indexRoot("ivfbase", dir)
       graft.streaming.PartitionedStore.removeTree(new java.io.File(root))
       buildBaseIvfIndex(spark, dir, root)
       root
-    })
+    }
 
   /** Wipe `root` and seed it with a copy of the shared IVF base. */
   private def seedFromIvfBase(spark: SparkSession, dir: String,
@@ -2397,7 +2337,7 @@ object SimilarityQueries {
     * not re-run it); returns the index root. */
   private[graft] def upsertedIvfIndex(spark: SparkSession,
       dir: String): String =
-    upsertIvfCache.getOrElseUpdate((spark, dir), {
+    upsertIvfCache((spark, dir)) {
       val root = indexRoot("ivfupsert", dir)
       // seedFromIvfBase wipes the root first — also the pid-recycling
       // guard (ADVICE r10): a crashed prior run under a recycled pid
@@ -2405,7 +2345,7 @@ object SimilarityQueries {
       seedFromIvfBase(spark, dir, root)
       upsertIvfIncoming(spark, dir, root)
       root
-    })
+    }
 
   // ---- index file hygiene after upserts (r10, judge item #2): every
   // upsert wave APPENDS a file generation into each touched cell dir —
@@ -2420,8 +2360,7 @@ object SimilarityQueries {
   // same frozen-centroid assignment), which is exactly the compaction
   // contract: file layout changes, content never.
 
-  private val compactIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val compactIvfCache = new Memo[(SparkSession, String), String]
 
   /** One incoming wave (`wave` ∈ 0..2 over the vec_id%10=9 slice):
     * frozen-centroid assignment + an append touching only the wave's
@@ -2439,14 +2378,14 @@ object SimilarityQueries {
     * index root (appends are not idempotent — reps must not re-run). */
   private[graft] def compactedIvfIndex(spark: SparkSession,
       dir: String): String =
-    compactIvfCache.getOrElseUpdate((spark, dir), {
+    compactIvfCache((spark, dir)) {
       val root = indexRoot("ivfcompact", dir)
       seedFromIvfBase(spark, dir, root)
       (0 until 3).foreach(w => upsertIvfWave(spark, dir, root, w))
       graft.streaming.PartitionedStore.compact(
         spark, s"$root/cells", "cent_id", maxFiles = 1)
       root
-    })
+    }
 
   // ---- ingest fold (r10, completing the streaming story): the
   // replay-safe bid= landing dirs are the WRITE-optimized layout; left
@@ -2461,8 +2400,7 @@ object SimilarityQueries {
   // the fold converges instead of duplicating — the same idempotence
   // argument as SnapshotStore's LWW merge.
 
-  private val foldCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val foldCache = new Memo[(SparkSession, String), String]
 
   /** Fold all landed bid= generations at `root` into the base cells;
     * returns the touched cell list. `crashAfterSwaps` injects a crash
@@ -2506,7 +2444,7 @@ object SimilarityQueries {
   /** Memoized copy of the streamed index + fold; returns the root. */
   private[graft] def foldedIvfIndex(spark: SparkSession,
       dir: String): String =
-    foldCache.getOrElseUpdate((spark, dir), {
+    foldCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivffold", dir)
       PartitionedStore.copyTree(
@@ -2514,7 +2452,7 @@ object SimilarityQueries {
         new java.io.File(root))
       foldIngest(spark, root)
       root
-    })
+    }
 
   // ---- stats-driven maintenance planner (r11, judge item #2): the
   // observability gate (q_sim_index_stats) computes exactly the signals
@@ -2624,8 +2562,8 @@ object SimilarityQueries {
     ()
   }
 
-  private val plannerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val plannerCache =
+    new Memo[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
 
   /** Memoized planner scenario: copy the streamed index (pending bid=
     * generations + multi-generation cells), apply the delete wear
@@ -2634,7 +2572,7 @@ object SimilarityQueries {
     * the decisions and the post-repair signals. */
   private[graft] def plannedIvfIndex(spark: SparkSession,
       dir: String): (String, MaintenancePlan, MaintenancePlan) =
-    plannerCache.getOrElseUpdate((spark, dir), {
+    plannerCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfplanner", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -2648,7 +2586,7 @@ object SimilarityQueries {
       val pre = planMaintenance(spark, root)
       runMaintenance(spark, dir, root, pre)
       (root, pre, planMaintenance(spark, root))
-    })
+    }
 
   // ---- streaming serve against the persisted index (r11, judge item
   // #3): every ANN serve above runs over a BOUNDED query batch; the
@@ -2926,15 +2864,8 @@ object SimilarityQueries {
   final case class ServeMaintTrace(gensAtStart: Int, crashTouched: Int,
       stagingAfterCrash: Boolean, stagingAfterServe: Boolean)
 
-  /** Lazy holder for [[ServeMaintTrace]] memoization: putIfAbsent picks
-    * one winner and the lazy val's monitor makes losers wait for the
-    * winner's destructive build instead of racing it (ADVICE r12). */
-  private final class ServeMaintHolder(build: => ServeMaintTrace) {
-    lazy val trace: ServeMaintTrace = build
-  }
-
-  private val serveMaintTraceCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), ServeMaintHolder]
+  private val serveMaintTraceCache =
+    new Memo[(SparkSession, String), ServeMaintTrace]
 
   /** One streaming serve pass over the serve-maint index: queries
     * vec_id%25=19 in 2 micro-batches; from the second trigger on, any
@@ -2998,34 +2929,23 @@ object SimilarityQueries {
     import graft.streaming.PartitionedStore
     val root = indexRoot("ivfservemaint", dir)
     val out = indexRoot("ivfservemaintout", dir)
-    val key = (spark, dir)
-    // Single-computation memoization via a lazy holder (ADVICE r12: the
-    // old contains/put pair was non-atomic, so two concurrent first
-    // invocations could both take the destructive removeTree/copyTree/
-    // stream path against the same root). putIfAbsent decides ONE
-    // winner; the winner's lazy body runs the destructive build exactly
-    // once, losers block on the lazy (JVM lazy-val monitor) until the
-    // build lands and then take the steady-state re-serve path.
-    val holder = new ServeMaintHolder({
+    // The memo runs the destructive removeTree/copyTree/stream build
+    // once (ADVICE r12); concurrent first callers wait for it, then take
+    // the steady-state re-serve path like every later caller.
+    var built = false
+    val trace = serveMaintTraceCache((spark, dir)) {
       PartitionedStore.removeTree(new java.io.File(root))
       PartitionedStore.removeTree(new java.io.File(out))
       PartitionedStore.copyTree(
         new java.io.File(streamUpsertedIvfIndex(spark, dir)),
         new java.io.File(root))
-      val trace = runServeMaintStream(spark, dir, root, out)
+      val t = runServeMaintStream(spark, dir, root, out)
       foldIngest(spark, root) // post-stream maintenance retry converges
-      trace
-    })
-    serveMaintTraceCache.putIfAbsent(key, holder) match {
-      case None => (out, holder.trace)
-      case Some(h) =>
-        val t = h.trace
-        // steady-state invocations re-run the serve stream against the
-        // folded layout (steady-state timing — fold convergence never
-        // changes served rows, which is the gate's claim)
-        runServeMaintStream(spark, dir, root, out)
-        (out, t)
+      built = true
+      t
     }
+    if (!built) runServeMaintStream(spark, dir, root, out)
+    (out, trace)
   }
 
   // ---- PQ-encode-on-ingest (r11, judge item #5): the compressed tier
@@ -3043,15 +2963,14 @@ object SimilarityQueries {
   // same codebook — the gate's oracle states exactly that rebuild, and
   // the spec asserts code-level equality outright.
 
-  private val streamPqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val streamPqCache = new Memo[(SparkSession, String), String]
 
   /** Memoized: base (vec_id < 9n/10) PQ index build — codebook trained
     * on base only, √n_base coarse cells — then streamed encoding of the
     * remaining 10% (2 micro-batches); returns the root. */
   private[graft] def streamPqIndex(spark: SparkSession,
       dir: String): String =
-    streamPqCache.getOrElseUpdate((spark, dir), {
+    streamPqCache((spark, dir)) {
       import graft.streaming.{PartitionedStore, Streams}
       val root = indexRoot("ivfpqstream", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -3096,7 +3015,7 @@ object SimilarityQueries {
         q.stop()
       }
       root
-    })
+    }
 
   // ---- codes-tier fold + planner coverage (r12, closing the r11
   // judge's Missing #1): the streamed PQ layout lands codes under
@@ -3131,8 +3050,8 @@ object SimilarityQueries {
     planMaintenance(spark, root, cellsSub = "codes",
       ingestSub = "codes_ingest", trackImbalance = false)
 
-  private val foldPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val foldPqCache =
+    new Memo[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
 
   /** Memoized: copy the streamed PQ index (pending codes_ingest bid=
     * generations), plan the codes tier, execute (fold + compact), and
@@ -3141,7 +3060,7 @@ object SimilarityQueries {
     * signals. */
   private[graft] def foldedPqIndex(spark: SparkSession,
       dir: String): (String, MaintenancePlan, MaintenancePlan) =
-    foldPqCache.getOrElseUpdate((spark, dir), {
+    foldPqCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfpqfold", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -3151,7 +3070,7 @@ object SimilarityQueries {
       val pre = planCodesMaintenance(spark, root)
       runCodesMaintenance(spark, root, pre)
       (root, pre, planCodesMaintenance(spark, root))
-    })
+    }
 
   // ---- persisted FILTERED ANN (r10, extending q_sim_filtered to the
   // across-job layout): the metadata-filter + similarity combination is
@@ -3163,15 +3082,14 @@ object SimilarityQueries {
   // tenant/language/date-partitioned vector store; the probed
   // (label, cell) pair list is driver metadata like every other serve.
 
-  private val filteredIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val filteredIvfCache = new Memo[(SparkSession, String), String]
 
   /** Memoized build of the (label, cent_id)-partitioned index: 16 seed
     * centroids (q_sim_filtered's discipline), every vector in its
     * (label, nearest-cell) partition. */
   private[graft] def filteredIvfIndex(spark: SparkSession,
       dir: String): String =
-    filteredIvfCache.getOrElseUpdate((spark, dir), {
+    filteredIvfCache((spark, dir)) {
       val root = indexRoot("ivffiltered", dir)
       val v = vectors(spark, dir)
       v.filter(col("vec_id") < 16)
@@ -3183,7 +3101,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("label", "cent_id")
         .parquet(s"$root/cells")
       root
-    })
+    }
 
   /** Per-label batched partition prune over probed (label, cell) pairs
     * (r10 judge item #6): ONE `label = l AND cent_id IN (cells_of_l)`
@@ -3422,9 +3340,8 @@ object SimilarityQueries {
     ()
   }
 
-  private val filteredPlannerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (String, FilteredMaintenancePlan, FilteredMaintenancePlan)]
+  private val filteredPlannerCache = new Memo[(SparkSession, String),
+    (String, FilteredMaintenancePlan, FilteredMaintenancePlan)]
 
   /** Apply the filtered-planner scenario's wear to a fresh copy of the
     * (label, cent_id) layout at `root` — three ways: a staged-swap
@@ -3477,13 +3394,13 @@ object SimilarityQueries {
     * → plan → execute → re-plan. */
   private[graft] def plannedFilteredIndex(spark: SparkSession, dir: String)
       : (String, FilteredMaintenancePlan, FilteredMaintenancePlan) =
-    filteredPlannerCache.getOrElseUpdate((spark, dir), {
+    filteredPlannerCache((spark, dir)) {
       val root = indexRoot("ivffilteredplanner", dir)
       wearFilteredLayout(spark, dir, root)
       val pre = planFilteredMaintenance(spark, root)
       runFilteredMaintenance(spark, root, pre)
       (root, pre, planFilteredMaintenance(spark, root))
-    })
+    }
 
   // ---- persisted COMPRESSED index (r10 extension): every raw layout
   // above persists the full embedding per row (~4·d bytes); the tier a
@@ -3499,8 +3416,7 @@ object SimilarityQueries {
   // the compression contract itself — the codes files carry NO
   // embedding column.
 
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val pqIndexCache = new Memo[(SparkSession, String), String]
 
   /** Memoized: build + write the compressed (IVF √n-cell + PQ 8×8)
     * index layout once; returns its root. The codes are derived from
@@ -3508,7 +3424,7 @@ object SimilarityQueries {
     * layout is exactly what a restarted job would reconstruct. */
   private[graft] def persistedPqIndex(spark: SparkSession,
       dir: String): String =
-    pqIndexCache.getOrElseUpdate((spark, dir), {
+    pqIndexCache((spark, dir)) {
       val root = indexRoot("ivfpqindex", dir)
       val v = vectors(spark, dir)
       val nn = v.agg(count(lit(1)).as("n"))
@@ -3525,7 +3441,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/codes")
       root
-    })
+    }
 
   /** Serve a query batch (raw vectors, vec_id%50=0) from a persisted
     * IVFPQ layout rooted at `root`: LUTs against the persisted codebook,
@@ -3606,8 +3522,8 @@ object SimilarityQueries {
   // scaled-long exact discipline throughout, so the gate's round-state
   // (per-cell before/after/arrived/departed counts) is engine-exact.
 
-  private val retrainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, DataFrame, DataFrame)]
+  private val retrainCache =
+    new Memo[(SparkSession, String), (String, DataFrame, DataFrame)]
 
   /** One warm-start round over the (copied) upserted index at `root`:
     * rewrites changed cells in place, writes centroids_v2, and returns
@@ -3690,7 +3606,7 @@ object SimilarityQueries {
     * (root, asg0, asg1). */
   private[graft] def retrainedIvfIndex(spark: SparkSession,
       dir: String): (String, DataFrame, DataFrame) =
-    retrainCache.getOrElseUpdate((spark, dir), {
+    retrainCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfretrain", dir)
       PartitionedStore.copyTree(
@@ -3698,7 +3614,7 @@ object SimilarityQueries {
         new java.io.File(root))
       val (asg0, asg1, _) = warmStartRetrain(spark, dir, root)
       (root, asg0, asg1)
-    })
+    }
 
   // ---- multi-round warm-start retrain (r11, judge item #7): one
   // seeded Lloyd round repairs the worst drift, but convergence takes
@@ -3719,15 +3635,15 @@ object SimilarityQueries {
 
   private[graft] val RETRAIN_MAX_ROUNDS = 3
 
-  private val retrain2Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[(Int, Long, Long)])]
+  private val retrain2Cache =
+    new Memo[(SparkSession, String), (String, Seq[(Int, Long, Long)])]
 
   /** Memoized: copy the upserted index, run warm-start rounds to the
     * membership fixed point (capped at [[RETRAIN_MAX_ROUNDS]]); returns
     * (root, per-executed-round (round, n_moved, n_changed_cells)). */
   private[graft] def multiRoundRetrainedIndex(spark: SparkSession,
       dir: String): (String, Seq[(Int, Long, Long)]) =
-    retrain2Cache.getOrElseUpdate((spark, dir), {
+    retrain2Cache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfretrain2", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -3746,7 +3662,7 @@ object SimilarityQueries {
         r += 1
       }
       (root, rows.result())
-    })
+    }
 
   /** Oracle chain for the multi-round retrain: the stored upsert-layout
     * assignment `wasg0`, then per round r the seeded mean update
@@ -3826,8 +3742,7 @@ object SimilarityQueries {
   // IndexMaintenanceSpec restarts the stream from its checkpoint
   // mid-corpus and redelivers a landed batch: zero duplicates either way.
 
-  private val streamUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val streamUpsertCache = new Memo[(SparkSession, String), String]
 
   /** Idempotent landing of one ingest micro-batch (vec_id, label,
     * embedding): exact-norm projection, frozen-centroid assignment,
@@ -3854,7 +3769,7 @@ object SimilarityQueries {
     * the root. */
   private[graft] def streamUpsertedIvfIndex(spark: SparkSession,
       dir: String): String =
-    streamUpsertCache.getOrElseUpdate((spark, dir), {
+    streamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("ivfstreamupsert", dir)
       // seedFromIvfBase clears the whole root first — stale
@@ -3879,7 +3794,7 @@ object SimilarityQueries {
         q.stop()
       }
       root
-    })
+    }
 
   // ---- Lloyd's k-means (r9): the TRAINING side of IVF — every cell
   // gate seeds centroids from the first vectors (the honest gate-sized
@@ -4022,15 +3937,14 @@ object SimilarityQueries {
   // a real vector store runs, assembled from this file's own gated
   // pieces (q_sim_kmeans ∘ q_sim_index_persisted's layout discipline).
 
-  private val trainedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val trainedIvfCache = new Memo[(SparkSession, String), String]
 
   /** Train → persist: cells = assignment of every vector to the FINAL
     * trained centroids, written hive-partitioned by cell; the trained
     * centroid table lands beside it. Memoized per (session, dir). */
   private[graft] def trainedIvfIndex(spark: SparkSession,
       dir: String): String =
-    trainedIvfCache.getOrElseUpdate((spark, dir), {
+    trainedIvfCache((spark, dir)) {
       val root = indexRoot("ivftrained", dir)
       val (cent, _, _) = kmeansRounds(spark, dir, withInertia = false)
       cent.write.mode("overwrite").parquet(s"$root/centroids")
@@ -4040,7 +3954,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$root/cells")
       root
-    })
+    }
 
   // ---- delete propagation into the persisted ANN layouts (r10, judge
   // item #1): SnapshotStore.deleteKeys is the right-to-be-forgotten path
@@ -4064,8 +3978,7 @@ object SimilarityQueries {
   // The gates operate on a COPY of the shared layouts (deleting from the
   // memoized originals would corrupt the sibling serve gates).
 
-  private val deletedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val deletedIvfCache = new Memo[(SparkSession, String), String]
 
   /** Deleted-vector predicate for the delete gate: 10% of the corpus,
     * disjoint from every serve gate's query set (%50=0 → %10=0,
@@ -4087,7 +4000,7 @@ object SimilarityQueries {
     * edited: they are model parameters (aggregates), not records. */
   private[graft] def deletedIvfIndexes(spark: SparkSession,
       dir: String): String =
-    deletedIvfCache.getOrElseUpdate((spark, dir), {
+    deletedIvfCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfdeleted", dir)
       PartitionedStore.copyTree(
@@ -4127,7 +4040,7 @@ object SimilarityQueries {
           .join(assignToCentroids(del, fcents), "vec_id"),
         Seq("vec_id"), Int.MaxValue)
       root
-    })
+    }
 
   /** Route external queries through a trained centroid table (k, dim,
     * c): exact squared-L2 score against all K centroids (broadcast
@@ -4725,7 +4638,7 @@ object SimilarityQueries {
       // both join sides read one materialization); int8 values held as
       // exact floats so the native vector_dot computes the int dot in
       // its primitive loop
-      val q8 = q8Cache.getOrElseUpdate((spark, dir), {
+      val q8 = q8Cache((spark, dir)) {
         val emb = Tables(spark, dir).embeddings
         val mx = emb.agg(
           max(array_max(transform(col("embedding"),
@@ -4737,7 +4650,7 @@ object SimilarityQueries {
                 .cast("float")).as("qe"))
           .repartition(spark.sparkContext.defaultParallelism)
           .localCheckpoint()
-      })
+      }
       val qs = q8.filter(col("vec_id") % 37 === 0 && col("vec_id") < 2000)
         .select(col("vec_id").as("q_id"), col("qe").as("qq"))
       val scored = broadcast(qs)

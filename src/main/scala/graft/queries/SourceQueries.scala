@@ -530,11 +530,10 @@ object SourceQueries {
     * recording the file manifest, the two artifacts a real incremental
     * run leaves behind — then wave 2 lands as appended part-files. The
     * gate body replays only RUN 2 against these artifacts. */
-  private val incrCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val incrCache = new Memo[(SparkSession, String), String]
 
   private def incrementalStaged(spark: SparkSession, dir: String): String =
-    incrCache.getOrElseUpdate((spark, dir), {
+    incrCache((spark, dir)) {
       val base = scratch("incr", dir)
       val land = s"$base/land"
       val docs = Tables(spark, dir).documents
@@ -553,7 +552,7 @@ object SourceQueries {
       docs.filter(col("doc_id") % 2 === 1)
         .repartition(2).write.mode("append").parquet(land)
       base
-    })
+    }
 
   /** Bad-record routing fixture: a CSV landing where every doc_id % 37
     * == 0 row carries a malformed numeric field — built as raw text so
@@ -580,12 +579,12 @@ object SourceQueries {
     * exactly what a Delta/Iceberg catalog holds driver/metadata-side —
     * and holding cached RDD blocks for it would bypass the
     * Scratch.checkpoint/release discipline for zero scan savings. */
-  private val skipCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[(String, Long, Long)])]
+  private val skipCache =
+    new Memo[(SparkSession, String), (String, Seq[(String, Long, Long)])]
 
   private[graft] def statsIndexed(spark: SparkSession,
       dir: String): (String, Seq[(String, Long, Long)]) =
-    skipCache.getOrElseUpdate((spark, dir), {
+    skipCache((spark, dir)) {
       val path = scratch("skipidx", dir)
       Tables(spark, dir).orders
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -597,7 +596,7 @@ object SourceQueries {
         .agg(min(col("o_orderkey")).as("mn"), max(col("o_orderkey")).as("mx"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       (path, stats)
-    })
+    }
 
   /** Skip-index serve path: the file paths whose [mn, mx] ranges admit
     * any of the probe ranges — the only data that reaches the driver is
