@@ -18,10 +18,12 @@ import org.apache.spark.sql.functions._
   *     Spark's 200 — on a real cluster this would be ~2-3× total cores and
   *     AQE coalesces down; locally 200 tiny partitions only add overhead.
   *   - UTC session timezone so timestamp semantics match the DuckDB oracle.
-  *   - In-memory (HDFS-backed) state store: a versioned heap map per
-  *     partition with delta checkpoints, the shape of the reference's
-  *     keyed state (`NestedStateMap.java:41`). RocksDB remains available
-  *     and is used where Spark requires it (GraftQuery.withRocksDBStateStore).
+  *   - In-memory state store (streaming.InPlaceStateStoreProvider): one
+  *     heap map per partition at the latest version, updated in place at
+  *     each commit over HDFS-format delta checkpoints, the shape of the
+  *     reference's keyed state (`NestedStateMap.java:41`). RocksDB remains
+  *     available and is used where Spark requires it
+  *     (GraftQuery.withRocksDBStateStore).
   */
 object Engine {
 
@@ -59,9 +61,11 @@ object Engine {
     // bucketed-table writes (q_join_bucketed) land here, not in cwd
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .config("spark.ui.enabled", "false")
-    // not RocksDB: JNI gets + put per key, flush + checkpoint per batch
+    // not RocksDB (JNI get + put per key, flush + checkpoint per batch) and
+    // not the HDFS-backed provider (a copy of every key per batch): the
+    // held map is updated in place; prefix-key state falls back to HDFS
     .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      classOf[graft.streaming.InPlaceStateStoreProvider].getName)
     // Checkpoint-file checksums OFF (r11 judge item #1): every streaming
     // checkpoint here is per-invocation tmpfs scratch (wiped on entry,
     // never restored across media failures — Streams.fresh), so checksum
@@ -90,6 +94,12 @@ object Engine {
     // FS — suite-verified), and parquet data paths keep their default.
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       "org.apache.hadoop.fs.local.RawLocalFs")
+    // Even the raw local FS forks without libhadoop: `chmod` per temp file
+    // and `readlink` per rename, ~30 processes per micro-batch across the
+    // offset, commit and state logs. The engine's file manager writes and
+    // renames local checkpoint files with java.nio instead.
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   /** Post-create setup: register every graft native Catalyst expression
     * (the shared GraftExpressions.functions list — same source as the

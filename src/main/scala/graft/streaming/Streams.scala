@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * (`MailboxProcessor.java:158`); the Spark-native equivalent is
   * micro-batch execution — each trigger re-runs the incremental plan and
   * the state store carries keyed state across batches
-  * (≙ HeapKeyedStateBackend: a versioned heap map with delta checkpoints;
-  * RocksDB remains available and is used where Spark requires it).
+  * (≙ HeapKeyedStateBackend: InPlaceStateStoreProvider's heap map, updated
+  * in place over delta checkpoints; RocksDB remains available and is used
+  * where Spark requires it).
   */
 object Streams {
 
