@@ -209,31 +209,23 @@ object GraphQueries {
       import graft.streaming.{SnapshotStore, Streams}
       val name = Streams.fresh("stream_graph_cdc", dir)
       val snap = s"${Streams.scratchRoot}/graph/$name/snap"
-      val live = GraftQuery.withShufflePartitions(spark, 4) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"),
               (col("user_id") % 30).as("a"),
               (lit(30) + col("event_id") % 40).as("b"),
               col("event_type")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SnapshotStore.mergeLww(spark, snap,
-              batch.select(col("event_id"), col("ts"),
-                col("a"), col("b"), col("event_type")),
-              keys = Seq("a", "b"),
-              ordering = Seq(col("ts").desc, col("event_id").desc))
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        SnapshotStore.read(spark, snap)
-          .filter(col("event_type") =!= "error")
-          .select(col("a"), col("b"))
+          name, files = 4, filesPerTrigger = 2, partitions = 4) {
+        (batch: DataFrame, _: Long) =>
+          SnapshotStore.mergeLww(spark, snap,
+            batch.select(col("event_id"), col("ts"),
+              col("a"), col("b"), col("event_type")),
+            keys = Seq("a", "b"),
+            ordering = Seq(col("ts").desc, col("event_id").desc))
       }
+      val live = SnapshotStore.read(spark, snap)
+        .filter(col("event_type") =!= "error")
+        .select(col("a"), col("b"))
       val edges = live.select(col("a").as("src"), col("b").as("dst"))
         .union(live.select(col("b").as("src"), col("a").as("dst")))
       pageRankScaled(spark, edges)

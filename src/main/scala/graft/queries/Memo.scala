@@ -39,6 +39,11 @@ final class Memo[K, V] {
     onces.put(key, once)
   }
 
+  /** `key`'s value if its build has finished (never waits on a build in
+    * progress). */
+  def get(key: K): Option[V] =
+    onces.get(key).flatMap(_.done).flatMap(_.toOption)
+
   /** Drops `key`; returns its value if its build had finished (never
     * waits on a build in progress). */
   def remove(key: K): Option[V] =

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ann.{IndexLayout, IndexRoot, Maintenance}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -719,7 +720,7 @@ object SimilarityQueries {
       dir: String): String =
     hnswIndexPathCache((spark, dir)) {
       import graft.streaming.PartitionedStore
-      val root = indexRoot("hnswindex", dir)
+      val root = IndexRoot("hnswindex", dir)
       PartitionedStore.removeTree(new java.io.File(root))
       val v = vectors(spark, dir)
       val (asg, hub, adj) = hnswIndex(spark, dir)
@@ -729,9 +730,9 @@ object SimilarityQueries {
         .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
           col("norm2").as("cnorm2"))
         .write.mode("overwrite").parquet(s"$root/centroids")
-      resetBuckets(spark, root)
+      IndexRoot.resetBuckets(spark, root)
       hub.write.mode("overwrite").parquet(s"$root/hubs")
-      val buckets = graphBuckets(spark, root)
+      val buckets = IndexRoot.buckets(spark, root)
       adj.withColumn("sb", pmod(col("src"), lit(buckets)))
         .repartition(col("sb"))
         .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
@@ -802,7 +803,7 @@ object SimilarityQueries {
         col("embedding").as("qemb"), col("norm2").as("qnorm2")),
       assignToCentroids(qv, cents).join(hubs, "cent_id")
         .select(col("vec_id").as("qid"), col("hub_id").as("node")),
-      beamWidth, graphBuckets(spark, root), qv.count())
+      beamWidth, IndexRoot.buckets(spark, root), qv.count())
   }
 
   /** The distributed beam loop from an EXPLICIT entry frame — shared by
@@ -845,8 +846,8 @@ object SimilarityQueries {
     // footers for the schema — at 8 hops' worth of calls per serve that
     // was pure fixed overhead; one relation per table per serve reads
     // the same data with the same pruning)
-    val adjT = graphAdj(spark, root)
-    val nodesT = graphNodes(spark, root)
+    val adjT = IndexLayout.Adj.union(spark, root)
+    val nodesT = IndexLayout.Nodes.union(spark, root)
     // LAZILY checkpointed (r15): every hop frame is materialized by the
     // driver-metadata collect that immediately follows it (bucket ids),
     // so the eager count job per checkpoint — one fixed-cost action per
@@ -969,7 +970,7 @@ object SimilarityQueries {
         col("embedding").as("qemb"), col("norm2").as("qnorm2")),
       assignToCentroids(qv, cents).join(hubs, "cent_id")
         .select(col("vec_id").as("qid"), col("hub_id").as("node")),
-      beamWidth, graphBuckets(spark, root), qv.count(),
+      beamWidth, IndexRoot.buckets(spark, root), qv.count(),
       qLabels = Some(qv.select(col("vec_id").as("qid"),
         col("label").as("qlabel"))))
   }
@@ -1008,9 +1009,9 @@ object SimilarityQueries {
       .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
         col("norm2").as("cnorm2"))
       .write.mode("overwrite").parquet(s"$root/centroids")
-    resetBuckets(spark, root)
+    IndexRoot.resetBuckets(spark, root)
     hub.write.mode("overwrite").parquet(s"$root/hubs")
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     adj.withColumn("sb", pmod(col("src"), lit(buckets)))
       .repartition(col("sb"))
       .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
@@ -1041,7 +1042,7 @@ object SimilarityQueries {
   private[graft] def buildHierLayers(spark: SparkSession,
       root: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     val hubP = spark.read.parquet(s"$root/hubs")
       .join(spark.read.parquet(s"$root/nodes")
         .select(col("vec_id").as("hub_id"),
@@ -1071,14 +1072,13 @@ object SimilarityQueries {
   private[graft] def hierHnswIndexes(spark: SparkSession,
       dir: String): (String, String) =
     hierHnswCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
       val v = vectors(spark, dir)
-      val rootF = indexRoot("hnswhierfull", dir)
+      val rootF = IndexRoot("hnswhierfull", dir)
       val nn = v.agg(count(lit(1)).as("n"))
       val half = v.crossJoin(broadcast(nn))
         .filter(col("vec_id") < expr("n div 2"))
         .select(v.columns.map(col): _*)
-      val rootH = indexRoot("hnswhierhalf", dir)
+      val rootH = IndexRoot("hnswhierhalf", dir)
       // The full slice's four bottom tables are EXACTLY the persisted
       // serve layout's (same slice, same deterministic builder, and
       // that root is never mutated after its memoized build — r16,
@@ -1092,11 +1092,7 @@ object SimilarityQueries {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val bF = Future {
-        PartitionedStore.removeTree(new java.io.File(rootF))
-        PartitionedStore.copyTree(
-          new java.io.File(base), new java.io.File(rootF))
-        resetBuckets(spark, rootF, Some(graphBuckets(spark, base)))
-        buildHierLayers(spark, rootF)
+        buildHierLayers(spark, IndexRoot.copyOf(spark, rootF, base))
       }
       val bH = Future(buildHierHnswIndex(spark, half, rootH))
       Await.result(bF, Duration.Inf); Await.result(bH, Duration.Inf)
@@ -1154,7 +1150,7 @@ object SimilarityQueries {
     val qCount = qv.count()
     hnswBeamFrom(spark, root, qPayload,
       hierEntryFrame(spark, root, qPayload, qCount), beamWidth,
-      graphBuckets(spark, root), qCount)
+      IndexRoot.buckets(spark, root), qCount)
   }
 
   /** Label-filtered serve THROUGH the hierarchical entry (r13): the
@@ -1168,7 +1164,7 @@ object SimilarityQueries {
     val qCount = qv.count()
     hnswBeamFrom(spark, root, qPayload,
       hierEntryFrame(spark, root, qPayload, qCount), beamWidth,
-      graphBuckets(spark, root), qCount,
+      IndexRoot.buckets(spark, root), qCount,
       qLabels = Some(qv.select(col("vec_id").as("qid"),
         col("label").as("qlabel"))))
   }
@@ -1199,49 +1195,13 @@ object SimilarityQueries {
   // gate's oracle states and why the planner loop converges in one
   // action round.
 
-  /** Hier-layer wear signals + the decision they imply. `staleCells`
-    * is driver metadata bounded by C = √n cell ids. */
-  final case class HierMaintenancePlan(entryChanged: Long,
-      staleCells: Seq[Any]) {
-    def reelect: Boolean = entryChanged > 0
-    def refresh: Boolean = !reelect && staleCells.nonEmpty
-    def actions: Seq[String] =
-      Seq("reelect" -> reelect, "refresh" -> refresh)
-        .collect { case (a, true) => a }
-  }
-
-  /** Read the layer tables' staleness against the current hub table:
-    * cells < S whose hub identity drifted from the stored entry
-    * (→ reelect) and cells whose hubs2 assignment row is missing,
-    * dead, or keyed to a demoted hub (→ refresh). */
-  private[graft] def planHierMaintenance(spark: SparkSession,
-      root: String): HierMaintenancePlan = {
-    val cur = spark.read.parquet(s"$root/hubs")
-    val buckets = graphBuckets(spark, root)
-    val es = math.ceil(math.sqrt(buckets.toDouble)).toLong
-    val entryChanged = cur.filter(col("cent_id") < es)
-      .select(col("cent_id").as("eh"), col("hub_id"))
-      .join(spark.read.parquet(s"$root/entryhubs")
-        .select(col("eh"), col("ehub")), Seq("eh"), "full_outer")
-      .filter(!(col("hub_id") <=> col("ehub")))
-      .count()
-    val staleCells = cur.select(col("cent_id"), col("hub_id"))
-      .join(spark.read.parquet(s"$root/hubs2")
-        .select(col("cent_id"), col("hub_id").as("h2_id")),
-        Seq("cent_id"), "full_outer")
-      .filter(!(col("hub_id") <=> col("h2_id")))
-      .select("cent_id").distinct().orderBy("cent_id")
-      .collect().map(_.get(0)).toSeq
-    HierMaintenancePlan(entryChanged, staleCells)
-  }
-
   /** The refresh action: recompute the hubs2 rows of exactly
     * `staleCells` (current hub → payload → nearest STORED entry, the
     * build's exact assignment) and staged-swap only the touched eh
     * partitions — old rows of stale cells drop out (dead/demoted
     * hubs), re-elected hubs gain theirs, every other partition stays
     * byte-identical. Sound only while the entry set is unchanged
-    * ([[HierMaintenancePlan.refresh]] guards this). */
+    * ([[Maintenance.HierMaintenancePlan.refresh]] guards this). */
   private[graft] def refreshHierLayer(spark: SparkSession, root: String,
       staleCells: Seq[Any]): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -1287,28 +1247,6 @@ object SimilarityQueries {
   private[graft] def reelectHierEntries(spark: SparkSession,
       root: String): Unit = buildHierLayers(spark, root)
 
-  /** Drive the hier-layer planner to its fixed point: plan → dispatch
-    * refresh/reelect → re-plan, until no action remains (each action
-    * lands on the layers-from-current-hubs fixed point, so one round
-    * converges; the bound is a crash-retry guard). Shared by the batch
-    * maintenance scenario ([[hierMaintIndex]]) and the graph-tier
-    * runner ([[runGraphMaintenance]] — r13 ADVICE: the runner declared
-    * a `hier` action it never executed). Returns rounds executed. */
-  private[graft] def resolveHierStaleness(spark: SparkSession,
-      root: String): Int = {
-    var plan = planHierMaintenance(spark, root)
-    var rounds = 0
-    while (plan.actions.nonEmpty && rounds < 4) {
-      if (plan.reelect) reelectHierEntries(spark, root)
-      else refreshHierLayer(spark, root, plan.staleCells)
-      rounds += 1
-      plan = planHierMaintenance(spark, root)
-    }
-    require(plan.actions.isEmpty,
-      s"hier maintenance did not converge in $rounds rounds: ${plan.actions}")
-    rounds
-  }
-
   private val hierMaintCache = new Memo[(SparkSession, String), String]
 
   /** Memoized worn-hier scenario: full hier build, hard delete of
@@ -1318,23 +1256,18 @@ object SimilarityQueries {
   private[graft] def hierMaintIndex(spark: SparkSession,
       dir: String): String =
     hierMaintCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("hnswhiermaint", dir)
       // the pristine full-corpus hier layout is hierHnswIndexes' first
       // root, content-identical by construction (same slice, same
       // deterministic builder, and that root is never mutated) — copy
       // it instead of re-running the full build (r14 judge item #1)
-      val src = hierHnswIndexes(spark, dir)._1
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
-      val buckets = graphBuckets(spark, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswhiermaint", dir),
+        hierHnswIndexes(spark, dir)._1)
+      val buckets = IndexRoot.buckets(spark, root)
       val del = vectors(spark, dir).filter(delPredicate).select("vec_id")
       deleteHnswNodes(spark, root, del, buckets)
       repairDeadHubs(spark, root, del,
         vectors(spark, dir).filter(!delPredicate), buckets)
-      resolveHierStaleness(spark, root)
+      Maintenance.resolveHierStaleness(spark, root)
       root
     }
 
@@ -1355,53 +1288,6 @@ object SimilarityQueries {
   // (pendingGens signal), merging landed generations into the base
   // buckets via staged swaps.
 
-  /** Memoized per-root BUCKET COUNT (= centroid rows): a layout constant
-    * — written once per root per process by the (memoized) builders and
-    * never mutated by deletes/repairs/folds, which touch nodes/adj/hubs
-    * but not centroids. Counting it from parquet per serve / per
-    * micro-batch was one fixed-cost job each time (guide §1.2 per-task
-    * work): the graph serves, the streaming landings, and every
-    * maintenance pass all start with this number. */
-  private val bucketCountCache = new Memo[(SparkSession, String), Long]
-
-  private[graft] def graphBuckets(spark: SparkSession, root: String): Long =
-    bucketCountCache((spark, root))(
-      spark.read.parquet(s"$root/centroids").count())
-
-  /** Invalidate — and, when the count is already known (layout copies:
-    * the source root's memoized count IS the copy's), seed — the
-    * bucket-count memo for a root whose centroids were just (re)written
-    * (ADVICE r15: builders must never let a rewrite observe a stale
-    * modulus; first-read memoization alone would). Seeding also drops
-    * the one count job each scenario copy used to pay on first touch. */
-  private def resetBuckets(spark: SparkSession, root: String,
-      known: Option[Long] = None): Unit = {
-    known match {
-      case Some(n) => bucketCountCache.put((spark, root), n)
-      case None => bucketCountCache.remove((spark, root))
-    }
-  }
-
-  /** Base adjacency ∪ landed edge generations (both sb-bucketed, so a
-    * bucket filter prunes BOTH sides). */
-  private[graft] def graphAdj(spark: SparkSession, root: String): DataFrame = {
-    val base = spark.read.parquet(s"$root/adj")
-    if (!new java.io.File(s"$root/ingest_adj").exists()) base
-    else base.unionByName(
-      spark.read.parquet(s"$root/ingest_adj").drop("bid"))
-  }
-
-  /** Base node payloads ∪ landed arrival payloads (both nb-bucketed).
-    * Base rows may lack cent_id on the plain serve layout — align by
-    * the common columns. */
-  private[graft] def graphNodes(spark: SparkSession, root: String): DataFrame = {
-    val base = spark.read.parquet(s"$root/nodes")
-    if (!new java.io.File(s"$root/ingest_nodes").exists()) base
-    else base.unionByName(
-      spark.read.parquet(s"$root/ingest_nodes").drop("bid"),
-      allowMissingColumns = true)
-  }
-
   /** Idempotent landing of one arrival micro-batch into the graph
     * tier: frozen-cell routing, top-8 frozen-BASE linking (+reverses),
     * edges and payloads under the batch's own bid= dirs. */
@@ -1409,7 +1295,7 @@ object SimilarityQueries {
       root: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     val cents = spark.read.parquet(s"$root/centroids")
     // lazily checkpointed, materialized by the incCells collect below
     // BEFORE either write: a REDELIVERED batch reads from the very
@@ -1454,7 +1340,7 @@ object SimilarityQueries {
       .distinct()
       .withColumn("sb", pmod(col("src"), lit(buckets)))
       .write.mode("overwrite").partitionBy("sb")
-      .parquet(s"$root/ingest_adj/bid=$id")
+      .parquet(IndexLayout.Adj.generation(root, id))
     // label lands with the payload (r13 ADVICE: the filtered serve
     // reads labels from the layout's own node rows — a landed arrival
     // without one is invisible to label-constrained candidacy)
@@ -1462,58 +1348,7 @@ object SimilarityQueries {
       .join(asgNew, "vec_id")
       .withColumn("nb", pmod(col("vec_id"), lit(buckets)))
       .write.mode("overwrite").partitionBy("nb")
-      .parquet(s"$root/ingest_nodes/bid=$id")
-  }
-
-  /** Planner-triggered fold of the graph tier's landed generations:
-    * staged-swap merge into exactly the touched sb/nb buckets (edges
-    * dedup by set union, payloads by keyed LWW), landed dirs removed
-    * last — crash anywhere converges on retry, the foldIngest
-    * discipline on both bucketed tables. */
-  private[graft] def foldGraphIngest(spark: SparkSession, root: String,
-      crashAfterSwaps: Int = Int.MaxValue): Seq[Any] = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.streaming.PartitionedStore
-    PartitionedStore.recoverPendingDelete(s"$root/adj")
-    PartitionedStore.recoverPendingDelete(s"$root/nodes")
-    if (!new java.io.File(s"$root/ingest_adj").exists()) return Seq.empty
-    val landedAdj = spark.read.parquet(s"$root/ingest_adj").drop("bid")
-    val sbs = landedAdj.select(col("sb")).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (sbs.nonEmpty) {
-      val merged = Scratch.checkpoint(
-        spark.read.parquet(s"$root/adj").filter(col("sb").isin(sbs: _*))
-          .unionByName(landedAdj)
-          .distinct()
-          .repartition(col("sb")))
-      PartitionedStore.replacePartitions(spark, s"$root/adj", "sb",
-        merged, sbs, crashAfterSwaps)
-      if (crashAfterSwaps < sbs.size) return sbs
-    }
-    if (new java.io.File(s"$root/ingest_nodes").exists()) {
-      val landedNodes = spark.read.parquet(s"$root/ingest_nodes").drop("bid")
-      val nbs = landedNodes.select(col("nb")).distinct()
-        .collect().map(_.get(0)).toSeq
-      if (nbs.nonEmpty) {
-        // duplicate payload rows are content-identical (same vec_id →
-        // same embedding/assignment); nulls-last keeps a cent_id-
-        // carrying row when the base layout lacks the column
-        val byVec = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cent_id").asc_nulls_last, col("nb"))
-        val mergedN = Scratch.checkpoint(
-          spark.read.parquet(s"$root/nodes")
-            .filter(col("nb").isin(nbs: _*))
-            .unionByName(landedNodes, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(byVec))
-            .filter(col("rn") === 1).drop("rn")
-            .repartition(col("nb")))
-        PartitionedStore.replacePartitions(spark, s"$root/nodes", "nb",
-          mergedN, nbs, Int.MaxValue)
-      }
-      PartitionedStore.removeTree(new java.io.File(s"$root/ingest_nodes"))
-    }
-    PartitionedStore.removeTree(new java.io.File(s"$root/ingest_adj"))
-    sbs
+      .parquet(IndexLayout.Nodes.generation(root, id))
   }
 
   private val hnswStreamUpsertCache = new Memo[(SparkSession, String), String]
@@ -1528,24 +1363,15 @@ object SimilarityQueries {
       dir: String): String =
     hnswStreamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
-      val root = indexRoot("hnswstreamupsert", dir)
-      seedFromBase(spark, dir, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswstreamupsert", dir),
+        baseHnswLayout(spark, dir))
       val name = Streams.fresh("stream_index_hnsw_upsert", dir)
-      GraftQuery.withShufflePartitions(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
             .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landGraphIngestBatch(batch, id, root); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
+          name, files = 4, filesPerTrigger = 2, partitions = 8)(
+        landGraphIngestBatch(_, _, root))
       root
     }
 
@@ -1559,7 +1385,7 @@ object SimilarityQueries {
     * landed generations into the base buckets; a delete wave (%10=3)
     * wears the graph; plan→run repairs it (wholesale hub re-election
     * over the live corpus, arrivals included) and — the wired step —
-    * [[runGraphMaintenance]]'s hier stage re-derives the layer tables
+    * [[Maintenance.runGraph]]'s hier stage re-derives the layer tables
     * from the repaired hub table; the closing re-plan must be empty.
     * Returns the root. The content fixed point equals the batch
     * repair scenario's (fold ∪ = batch append; layers = f(current
@@ -1568,42 +1394,33 @@ object SimilarityQueries {
       dir: String): String =
     hierStreamFoldCache((spark, dir)) {
       import graft.streaming.Streams
-      val root = indexRoot("hnswhierfold", dir)
       // hier-over-base-slice = the shared base layout + the two layer
       // tables (buildHierHnswIndex writes the identical four bottom
       // tables for this slice, then buildHierLayers) — copy + layers
-      seedFromBase(spark, dir, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswhierfold", dir),
+        baseHnswLayout(spark, dir))
       buildHierLayers(spark, root)
       val name = Streams.fresh("stream_index_hnsw_hier_fold", dir)
-      GraftQuery.withShufflePartitions(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
             .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landGraphIngestBatch(batch, id, root); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
+          name, files = 4, filesPerTrigger = 2, partitions = 8)(
+        landGraphIngestBatch(_, _, root))
       // planner pass 1: fold the landed generations (hubs untouched —
       // the runner's hier step observes no staleness and does nothing)
-      val p1 = planGraphMaintenance(spark, root)
+      val p1 = Maintenance.planGraph(spark, root)
       require(p1.fold, s"landed generations not observed by the planner: $p1")
-      runGraphMaintenance(spark, root, p1)
+      Maintenance.runGraph(spark, root, p1)
       // delete wave, then planner pass 2: the repair re-elects hubs
       // wholesale and the hier stage refreshes the layers from them
-      val buckets = graphBuckets(spark, root)
+      val buckets = IndexRoot.buckets(spark, root)
       deleteHnswNodes(spark, root,
         vectors(spark, dir).filter(delPredicate).select("vec_id"), buckets)
-      val p2 = planGraphMaintenance(spark, root)
+      val p2 = Maintenance.planGraph(spark, root)
       require(p2.repair, s"delete wave left nothing to repair: $p2")
-      runGraphMaintenance(spark, root, p2)
-      val p3 = planGraphMaintenance(spark, root)
+      Maintenance.runGraph(spark, root, p2)
+      val p3 = Maintenance.planGraph(spark, root)
       require(p3.actions.isEmpty,
         s"graph+hier maintenance did not converge: $p3")
       root
@@ -1668,15 +1485,10 @@ object SimilarityQueries {
   private[graft] def deletedHnswIndex(spark: SparkSession,
       dir: String): String =
     hnswDeleteCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
       import org.apache.spark.sql.expressions.Window
-      val root = indexRoot("hnswdeleted", dir)
-      val src = persistedHnswIndex(spark, dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
-      val buckets = graphBuckets(spark, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswdeleted", dir),
+        persistedHnswIndex(spark, dir))
+      val buckets = IndexRoot.buckets(spark, root)
       val del = vectors(spark, dir).filter(delPredicate).select("vec_id")
       deleteHnswNodes(spark, root, del, buckets)
       repairDeadHubs(spark, root, del,
@@ -1776,9 +1588,9 @@ object SimilarityQueries {
       .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
         col("norm2").as("cnorm2"))
       .write.mode("overwrite").parquet(s"$root/centroids")
-    resetBuckets(spark, root)
+    IndexRoot.resetBuckets(spark, root)
     hubB.write.mode("overwrite").parquet(s"$root/hubs")
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     adjB.withColumn("sb", pmod(col("src"), lit(buckets)))
       .repartition(col("sb"))
       .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
@@ -1797,7 +1609,7 @@ object SimilarityQueries {
   private[graft] def upsertHnswIncoming(spark: SparkSession, dir: String,
       root: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     val inc = vectors(spark, dir).filter(col("vec_id") % 10 === 9)
     val cents = spark.read.parquet(s"$root/centroids")
     val asgNew = assignToCentroids(inc, cents)
@@ -1843,41 +1655,26 @@ object SimilarityQueries {
     * construction (same slice, same deterministic build), so the
     * recomputation bought nothing but sweep wall-clock (r14 judge item
     * #1: the rebuilds were a top cost of the over-budget bench sweep).
-    * Scenarios now [[graft.streaming.PartitionedStore.copyTree]] this
-    * tree and mutate the COPY; this root itself is never served from
-    * or mutated after build, so copies taken at any later time see the
-    * same bytes. */
+    * Scenarios now copy this tree ([[IndexRoot.copyOf]]) and mutate the
+    * COPY; this root itself is never served from or mutated after
+    * build, so copies taken at any later time see the same bytes. */
   private[graft] def baseHnswLayout(spark: SparkSession,
       dir: String): String =
     hnswBaseCache((spark, dir)) {
       import graft.streaming.PartitionedStore
-      val root = indexRoot("hnswbase", dir)
+      val root = IndexRoot("hnswbase", dir)
       PartitionedStore.removeTree(new java.io.File(root))
       buildBaseHnswIndex(spark, dir, root)
       root
     }
-
-  /** Wipe `root` and seed it with a copy of the shared base layout
-    * (bucket-count memo seeded from the source's — a copy's centroid
-    * count IS the source's, and this drops the count job each scenario
-    * copy paid on first touch). */
-  private def seedFromBase(spark: SparkSession, dir: String,
-      root: String): Unit = {
-    import graft.streaming.PartitionedStore
-    val base = baseHnswLayout(spark, dir)
-    PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(base), new java.io.File(root))
-    resetBuckets(spark, root, Some(graphBuckets(spark, base)))
-  }
 
   /** Memoized base build + arrival linking (appends are not
     * idempotent — reps must not re-run); returns the root. */
   private[graft] def upsertedHnswIndex(spark: SparkSession,
       dir: String): String =
     hnswUpsertCache((spark, dir)) {
-      val root = indexRoot("hnswupsert", dir)
-      seedFromBase(spark, dir, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswupsert", dir),
+        baseHnswLayout(spark, dir))
       upsertHnswIncoming(spark, dir, root)
       root
     }
@@ -1910,67 +1707,6 @@ object SimilarityQueries {
   // rebuild. Compaction after an appending repair is the same closing
   // step the raw tier runs.
 
-  /** Graph-tier wear signals + the decisions they imply (pure functions
-    * of the signals, like [[MaintenancePlan]]). `overBound` carries
-    * layout-qualified bucket labels (`adj/sb=3`, `nodes/nb=7`). */
-  final case class GraphMaintenancePlan(degraded: Long, deadHubs: Long,
-      overBound: Seq[String], maxFiles: Int, pendingGens: Int = 0,
-      hierStale: Long = 0) {
-    def fold: Boolean = pendingGens > 0
-    def repair: Boolean = degraded > 0 || deadHubs > 0
-    def compact: Boolean = overBound.nonEmpty
-    def hier: Boolean = hierStale > 0
-    def actions: Seq[String] =
-      Seq("fold" -> fold, "repair" -> repair, "compact" -> compact,
-        "hier" -> hier)
-        .collect { case (a, true) => a }
-  }
-
-  /** Live nodes whose out-degree fell below min(8, live cellmates):
-    * the re-kNN work list. Requires the cent_id-carrying node payload
-    * (the maintenance-lineage layouts write it exactly for this). */
-  private def degradedNodes(spark: SparkSession, root: String): DataFrame = {
-    val nodes = spark.read.parquet(s"$root/nodes")
-    val outdeg = spark.read.parquet(s"$root/adj")
-      .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val cellSizes = nodes.groupBy(col("cent_id")).agg(count(lit(1)).as("cn"))
-    nodes
-      .join(outdeg.withColumnRenamed("src", "vec_id"), Seq("vec_id"), "left")
-      .join(broadcast(cellSizes), "cent_id")
-      .filter(coalesce(col("deg"), lit(0L)) < least(lit(8L), col("cn") - 1))
-  }
-
-  /** Read the graph layout's maintenance signals (see the block doc). */
-  private[graft] def planGraphMaintenance(spark: SparkSession,
-      root: String, maxFiles: Int = PLANNER_MAX_FILES): GraphMaintenancePlan = {
-    import graft.streaming.PartitionedStore
-    val degraded = degradedNodes(spark, root).count()
-    val deadHubs = spark.read.parquet(s"$root/hubs")
-      .join(spark.read.parquet(s"$root/nodes")
-        .select(col("vec_id").as("hub_id")), Seq("hub_id"), "left_anti")
-      .count()
-    val over =
-      PartitionedStore.partFileCounts(s"$root/adj", "sb")
-        .filter(_._2 > maxFiles).keys.toSeq.sorted.map(v => s"adj/sb=$v") ++
-      PartitionedStore.partFileCounts(s"$root/nodes", "nb")
-        .filter(_._2 > maxFiles).keys.toSeq.sorted.map(v => s"nodes/nb=$v")
-    // streamed-upsert landings pending a fold (r12 judge item #6)
-    val gens = Option(new java.io.File(s"$root/ingest_adj").listFiles())
-      .toSeq.flatten
-      .count(f => f.isDirectory && f.getName.startsWith("bid="))
-    // layer-table drift, when this layout carries the hier tier (r13):
-    // the detailed refresh-vs-reelect split stays with
-    // [[planHierMaintenance]]; the graph plan reports the combined
-    // staleness so one planner read covers the whole tier
-    val hierStale =
-      if (!new java.io.File(s"$root/hubs2").exists()) 0L
-      else {
-        val hp = planHierMaintenance(spark, root)
-        hp.entryChanged + hp.staleCells.size
-      }
-    GraphMaintenancePlan(degraded, deadHubs, over, maxFiles, gens, hierStale)
-  }
-
   /** The periodic repair pass: fresh top-8 overlays for degraded
     * neighborhoods + wholesale hub re-election and re-mesh, all
     * dedup-appended — pre-existing files in buckets receiving no new
@@ -1978,9 +1714,9 @@ object SimilarityQueries {
   private[graft] def repairHnswGraph(spark: SparkSession,
       root: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val buckets = graphBuckets(spark, root)
+    val buckets = IndexRoot.buckets(spark, root)
     val nodes = spark.read.parquet(s"$root/nodes")
-    val deg = degradedNodes(spark, root)
+    val deg = Maintenance.degradedNodes(spark, root)
       .select(col("vec_id").as("src"), col("cent_id"),
         col("embedding"), col("norm2"))
     // degraded cells: driver metadata, ≤ cells values
@@ -2034,58 +1770,28 @@ object SimilarityQueries {
     hub1.write.mode("overwrite").parquet(s"$root/hubs")
   }
 
-  /** Execute the planned graph repairs in dependency order: the fold
-    * first (landed generations join the base buckets), then the repair
-    * (it appends — its file wear is part of the pass), then the
-    * compaction closing step over both bucketed tables, and LAST the
-    * hier-layer resolution when this layout carries the hier tier
-    * (r13 ADVICE: the runner declared plan.hier but never executed it,
-    * and a just-run repair re-elects hubs wholesale — creating layer
-    * staleness the stale plan could not know about — so the hier step
-    * re-plans from the post-repair hub table rather than trusting
-    * `plan`). */
-  private[graft] def runGraphMaintenance(spark: SparkSession,
-      root: String, plan: GraphMaintenancePlan): Unit = {
-    import graft.streaming.PartitionedStore
-    if (plan.fold) foldGraphIngest(spark, root)
-    if (plan.repair) repairHnswGraph(spark, root)
-    if (plan.compact || plan.repair) {
-      PartitionedStore.compact(spark, s"$root/adj", "sb", plan.maxFiles)
-      PartitionedStore.compact(spark, s"$root/nodes", "nb", plan.maxFiles)
-      ()
-    }
-    if (new java.io.File(s"$root/hubs2").exists()
-        && (plan.hier || plan.repair || plan.fold)) {
-      resolveHierStaleness(spark, root); ()
-    }
-  }
-
   private val hnswRepairCache = new Memo[(SparkSession, String),
-    (String, GraphMaintenancePlan, GraphMaintenancePlan)]
+    (String, Maintenance.GraphMaintenancePlan, Maintenance.GraphMaintenancePlan)]
 
   /** Memoized repair scenario: base graph + upsert wave (%10=9) +
     * delete wave (%10=3, payload/edges only — entry refresh is the
     * repair's job), then plan → repair → re-plan. Returns (root, pre,
     * post); the spec pins the wear signals and their convergence. */
   private[graft] def repairedHnswIndex(spark: SparkSession,
-      dir: String): (String, GraphMaintenancePlan, GraphMaintenancePlan) =
+      dir: String)
+      : (String, Maintenance.GraphMaintenancePlan, Maintenance.GraphMaintenancePlan) =
     hnswRepairCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("hnswrepair", dir)
       // base + upsert wave is exactly the COMPLETED upsert scenario's
       // content (that root is never mutated after its memoized build) —
       // copy it instead of recomputing the two most expensive steps
-      val src = upsertedHnswIndex(spark, dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
-      val buckets = graphBuckets(spark, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("hnswrepair", dir),
+        upsertedHnswIndex(spark, dir))
+      val buckets = IndexRoot.buckets(spark, root)
       deleteHnswNodes(spark, root,
         vectors(spark, dir).filter(delPredicate).select("vec_id"), buckets)
-      val pre = planGraphMaintenance(spark, root)
-      runGraphMaintenance(spark, root, pre)
-      (root, pre, planGraphMaintenance(spark, root))
+      val pre = Maintenance.planGraph(spark, root)
+      Maintenance.runGraph(spark, root, pre)
+      (root, pre, Maintenance.planGraph(spark, root))
     }
 
   // ===== index-scale dial: cells ∝ √n (r7 judge item #5) =================
@@ -2188,47 +1894,6 @@ object SimilarityQueries {
   // the PartitionFilters. Centroids land beside the cells as the (tiny)
   // routing table a fresh serving job reads first.
 
-  /** Process-private on-disk root for a persisted index layout (ADVICE
-    * r9): the name carries an MD5 prefix of the FULL source-dir path —
-    * the sanitized name alone can collide distinct dirs onto one root —
-    * and the JVM pid, so two concurrent JVMs (e.g. bench and verify
-    * over the same sf dir) can never race overwrite/append on a shared
-    * root (the upsert layout's append is guarded only by IN-PROCESS
-    * memoization). The per-process rebuild this implies is the memoized
-    * caches' existing contract; a real deployment replaces the pid with
-    * its catalog's table identity + a transactional commit. */
-  /** One-shot sweep of DEAD prior processes' index roots (ADVICE r10:
-    * pid-suffixed roots accumulated ~9 layout copies per bench/verify
-    * run with nothing ever removing them). Only dirs matching the
-    * `-p<pid>` suffix whose pid is provably not alive are removed —
-    * non-pid roots (format fixtures, dedup indexes) and any LIVE
-    * process's roots are untouched, so a concurrent bench + verify pair
-    * can never sweep each other. Forced on first [[indexRoot]] call,
-    * i.e. before this process creates its own roots. */
-  private lazy val sweptStaleRoots: Unit = {
-    val self = ProcessHandle.current().pid()
-    val pidSuffix = raw".*-p(\d+)$$".r
-    Option(new java.io.File("/tmp/graft-sources").listFiles()).toSeq.flatten
-      .filter(_.isDirectory)
-      .foreach { d =>
-        d.getName match {
-          case pidSuffix(pid) if pid.toLong != self &&
-              !ProcessHandle.of(pid.toLong)
-                .map[Boolean](_.isAlive).orElse(false) =>
-            graft.streaming.PartitionedStore.removeTree(d)
-          case _ =>
-        }
-      }
-  }
-
-  private[graft] def indexRoot(kind: String, dir: String): String = {
-    sweptStaleRoots
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    s"/tmp/graft-sources/$kind-${
-      dir.replaceAll("[^A-Za-z0-9.]", "_")}-$h-p${ProcessHandle.current().pid()}"
-  }
-
   /** Memoized per (session, dir): build + write the √n-cell IVF index
     * once, return its root path. The write cost is paid on first touch
     * (measured by the bench's first rep); every later serve reads the
@@ -2239,7 +1904,7 @@ object SimilarityQueries {
       dir: String): String =
     persistedIvfCache((spark, dir)) {
       val v = vectors(spark, dir)
-      val root = indexRoot("ivfindex", dir)
+      val root = IndexRoot("ivfindex", dir)
       val nn = v.agg(count(lit(1)).as("n"))
       v.crossJoin(broadcast(nn))
         .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
@@ -2290,20 +1955,11 @@ object SimilarityQueries {
   private[graft] def baseIvfLayout(spark: SparkSession,
       dir: String): String =
     ivfBaseCache((spark, dir)) {
-      val root = indexRoot("ivfbase", dir)
+      val root = IndexRoot("ivfbase", dir)
       graft.streaming.PartitionedStore.removeTree(new java.io.File(root))
       buildBaseIvfIndex(spark, dir, root)
       root
     }
-
-  /** Wipe `root` and seed it with a copy of the shared IVF base. */
-  private def seedFromIvfBase(spark: SparkSession, dir: String,
-      root: String): Unit = {
-    import graft.streaming.PartitionedStore
-    PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(baseIvfLayout(spark, dir)), new java.io.File(root))
-  }
 
   /** Build the frozen-centroid BASE index (vec_id % 10 <> 9) at `root`:
     * centroids = base vectors with vec_id < ceil(sqrt(n_base)). */
@@ -2338,11 +1994,11 @@ object SimilarityQueries {
   private[graft] def upsertedIvfIndex(spark: SparkSession,
       dir: String): String =
     upsertIvfCache((spark, dir)) {
-      val root = indexRoot("ivfupsert", dir)
-      // seedFromIvfBase wipes the root first — also the pid-recycling
-      // guard (ADVICE r10): a crashed prior run under a recycled pid
-      // could leave stale appended generations
-      seedFromIvfBase(spark, dir, root)
+      // copyOf wipes the root first — also the pid-recycling guard
+      // (ADVICE r10): a crashed prior run under a recycled pid could
+      // leave stale appended generations
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfupsert", dir),
+        baseIvfLayout(spark, dir))
       upsertIvfIncoming(spark, dir, root)
       root
     }
@@ -2379,213 +2035,63 @@ object SimilarityQueries {
   private[graft] def compactedIvfIndex(spark: SparkSession,
       dir: String): String =
     compactIvfCache((spark, dir)) {
-      val root = indexRoot("ivfcompact", dir)
-      seedFromIvfBase(spark, dir, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfcompact", dir),
+        baseIvfLayout(spark, dir))
       (0 until 3).foreach(w => upsertIvfWave(spark, dir, root, w))
-      graft.streaming.PartitionedStore.compact(
-        spark, s"$root/cells", "cent_id", maxFiles = 1)
+      IndexLayout.Cells.compact(spark, root, maxFiles = 1)
       root
     }
 
   // ---- ingest fold (r10, completing the streaming story): the
   // replay-safe bid= landing dirs are the WRITE-optimized layout; left
   // alone they accumulate one generation per micro-batch and every
-  // serve reads them all. The fold is the maintenance pass that merges
-  // the landed generations into the base cell layout through
-  // PartitionedStore's staged swap — touched cells get (live ∪ landed)
-  // installed atomically, untouched cells stay byte-identical, and the
-  // bid= dirs are removed only AFTER the swap completes. The crash
-  // window between swap completion and ingest removal leaves rows in
-  // both places, so the merge is KEYED (dedup by vec_id): re-running
-  // the fold converges instead of duplicating — the same idempotence
-  // argument as SnapshotStore's LWW merge.
+  // serve reads them all. The fold ([[IndexLayout.fold]]) merges them
+  // into the base cells through PartitionedStore's staged swap, keyed
+  // by vec_id so a re-run after a crash converges instead of
+  // duplicating — the same idempotence argument as SnapshotStore's LWW
+  // merge.
 
   private val foldCache = new Memo[(SparkSession, String), String]
-
-  /** Fold all landed bid= generations at `root` into the base cells;
-    * returns the touched cell list. `crashAfterSwaps` injects a crash
-    * for the recovery spec. `cellsSub`/`ingestSub` select the tier (r11
-    * judge item #2): the raw cells/ingest pair by default, the
-    * compressed codes/codes_ingest pair for the PQ tier — the identical
-    * keyed staged-swap merge applies because both layouts share the
-    * (vec_id-keyed rows, cent_id partitions) shape; only the payload
-    * columns differ (raw embedding vs 8-byte code array). */
-  private[graft] def foldIngest(spark: SparkSession, root: String,
-      crashAfterSwaps: Int = Int.MaxValue,
-      cellsSub: String = "cells", ingestSub: String = "ingest"): Seq[Any] = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.streaming.PartitionedStore
-    val ingestDir = new java.io.File(s"$root/$ingestSub")
-    PartitionedStore.recoverPendingDelete(s"$root/$cellsSub")
-    if (!ingestDir.exists()) return Seq.empty
-    val ingest = spark.read.parquet(s"$root/$ingestSub").drop("bid")
-    // touched cells: driver metadata, ≤ cells values
-    val touched = ingest.select(col("cent_id")).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (touched.nonEmpty) {
-      val live = spark.read.parquet(s"$root/$cellsSub")
-        .filter(col("cent_id").isin(touched: _*))
-      val byVec = Window.partitionBy(col("vec_id")).orderBy(col("cent_id"))
-      val merged = Scratch.checkpoint(
-        live.unionByName(ingest)
-          .withColumn("rn", row_number().over(byVec))
-          .filter(col("rn") === 1).drop("rn")
-          .repartition(col("cent_id")))
-      PartitionedStore.replacePartitions(spark, s"$root/$cellsSub", "cent_id",
-        merged, touched, crashAfterSwaps)
-      // injected crash: staging committed, ingest still present — the
-      // next fold completes the swaps and re-merges idempotently
-      if (crashAfterSwaps < touched.size) return touched
-    }
-    PartitionedStore.removeTree(ingestDir)
-    touched
-  }
 
   /** Memoized copy of the streamed index + fold; returns the root. */
   private[graft] def foldedIvfIndex(spark: SparkSession,
       dir: String): String =
     foldCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("ivffold", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
-      foldIngest(spark, root)
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivffold", dir),
+        streamUpsertedIvfIndex(spark, dir))
+      IndexLayout.Cells.fold(spark, root)
       root
     }
 
   // ---- stats-driven maintenance planner (r11, judge item #2): the
   // observability gate (q_sim_index_stats) computes exactly the signals
-  // every maintenance pass above keys off, and until now a human had to
-  // read them — this is the pass that ACTS on them, the autonomous-
-  // maintenance shape a production index runs on a schedule: read the
-  // layout's own on-disk state, decide {fold, compact, retrain,
-  // nothing}, execute the triggered repairs through the same
-  // staged-swap machinery the individual gates prove, and certify by
-  // re-reading the stats. Decision rules (each trigger names the pass
-  // that repairs it):
-  //   - pending `bid=` ingest generations  -> fold (read-optimize the
-  //     write-optimized landing dirs into base cells)
-  //   - any cell over the per-partition file bound -> compact
-  //   - imbalance factor (max_cell · n_cells / n_rows — the
-  //     q_sim_index_stats formula) over the dial -> warm-start retrain
-  // Deletes are NOT planner-triggered: right-to-be-forgotten is an
-  // external command, not an observable decay — the gate's scenario
-  // applies one as part of the wear instead.
+  // every maintenance pass above keys off; [[Maintenance]] is the pass
+  // that ACTS on them — read the layout's own on-disk state, decide
+  // {fold, compact, retrain, nothing}, run the triggered repairs, and
+  // certify by re-reading. The gate's scenario applies a delete as
+  // part of the wear (deletes are commands, not planner decisions).
 
-  /** The signals read from a layout plus the decisions they imply —
-    * decisions are pure functions of the signals, so "the planner chose
-    * exactly the triggered passes" is true by construction and the spec
-    * pins the signal values themselves. */
-  final case class MaintenancePlan(pendingGens: Int,
-      overBound: Seq[String], imbalance: Double,
-      maxFiles: Int, imbalanceMax: Double) {
-    def fold: Boolean = pendingGens > 0
-    def compact: Boolean = overBound.nonEmpty
-    def retrain: Boolean = imbalance > imbalanceMax
-    def actions: Seq[String] =
-      Seq("fold" -> fold, "compact" -> compact, "retrain" -> retrain)
-        .collect { case (a, true) => a }
-  }
-
-  private[graft] val PLANNER_MAX_FILES = 1
-  /** Retrain dial: the natural imbalance of a nearest-centroid √n-cell
-    * assignment sits well under 2 on every tested corpus (1.3-1.5 at
-    * sf0.01 per q_sim_index_stats); 4.0 only trips on real damage —
-    * membership drift or a corrupted assignment — which is exactly when
-    * a seeded Lloyd round pays for its corpus pass. */
-  private[graft] val PLANNER_IMBALANCE_MAX = 4.0
-
-  /** Read a cent_id-partitioned index root's maintenance signals:
-    * pending ingest generations and per-cell file counts from the
-    * directory layout (driver metadata), the imbalance factor from one
-    * aggregation over the layouts themselves (cells ∪ landed ingest —
-    * the stats reflect what is actually on disk).
-    *
-    * `cellsSub`/`ingestSub` select the TIER the planner observes (r11
-    * judge item #2 extended one tier down): the raw layout's
-    * cells/ingest by default, the compressed layout's
-    * codes/codes_ingest for the PQ tier — same signals, same decisions,
-    * same fold/compact machinery. `trackImbalance = false` disables the
-    * retrain dial where retraining is not a legal repair (the codes
-    * tier: re-clustering the coarse quantizer would invalidate every
-    * stored code; the fix for a drifted codes tier is re-encoding
-    * against a retrained RAW tier, an external decision like deletes).
-    *
-    * Empty/missing layouts are a valid observable state (ADVICE r11 —
-    * everything deleted, or a root created but never loaded): all
-    * signals read as healthy (no rows → no imbalance) instead of
-    * throwing on the null aggregate. */
-  private[graft] def planMaintenance(spark: SparkSession, root: String,
-      maxFiles: Int = PLANNER_MAX_FILES,
-      imbalanceMax: Double = PLANNER_IMBALANCE_MAX,
-      cellsSub: String = "cells", ingestSub: String = "ingest",
-      trackImbalance: Boolean = true): MaintenancePlan = {
-    import graft.streaming.PartitionedStore
-    val gens = Option(new java.io.File(s"$root/$ingestSub").listFiles())
-      .toSeq.flatten
-      .count(f => f.isDirectory && f.getName.startsWith("bid="))
-    val cellsPath = s"$root/$cellsSub"
-    val counts =
-      if (!PartitionedStore.exists(cellsPath)) Map.empty[String, Int]
-      else PartitionedStore.partFileCounts(cellsPath, "cent_id")
-    val over = counts.filter(_._2 > maxFiles).keys.toSeq.sorted
-    val hasCells = counts.values.sum > 0
-    val imb = if (!trackImbalance || !hasCells) 0.0 else {
-      val live = spark.read.parquet(cellsPath)
-        .select(col("vec_id"), col("cent_id"))
-      val all = if (gens > 0)
-        live.unionByName(spark.read.parquet(s"$root/$ingestSub")
-          .select(col("vec_id"), col("cent_id")))
-      else live
-      val r = all.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("c"), sum(col("n")).as("rows"),
-          max(col("n")).as("mx")).head()
-      // rows == 0 (fully-deleted cells layout: dirs exist, files empty)
-      // is healthy by definition
-      if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-      else r.getLong(2).toDouble * r.getLong(0) / r.getLong(1)
-    }
-    MaintenancePlan(gens, over, imb, maxFiles, imbalanceMax)
-  }
-
-  /** Execute the planned repairs in dependency order: fold first (the
-    * landed generations must be IN the cells before file hygiene or a
-    * membership repair can see them), then compact, then the seeded
-    * Lloyd round. Every pass is the gated staged-swap machinery. */
-  private[graft] def runMaintenance(spark: SparkSession, dir: String,
-      root: String, plan: MaintenancePlan): Unit = {
-    if (plan.fold) foldIngest(spark, root)
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/cells", "cent_id", plan.maxFiles)
-    if (plan.retrain) warmStartRetrain(spark, dir, root)
-    ()
-  }
-
-  private val plannerCache =
-    new Memo[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val plannerCache = new Memo[(SparkSession, String),
+    (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan)]
 
   /** Memoized planner scenario: copy the streamed index (pending bid=
     * generations + multi-generation cells), apply the delete wear
     * (vec_id%10=3, the staged-swap pass), then plan → execute → re-plan.
     * Returns (root, pre-repair plan, post-repair plan) — the spec pins
     * the decisions and the post-repair signals. */
-  private[graft] def plannedIvfIndex(spark: SparkSession,
-      dir: String): (String, MaintenancePlan, MaintenancePlan) =
+  private[graft] def plannedIvfIndex(spark: SparkSession, dir: String)
+      : (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan) =
     plannerCache((spark, dir)) {
       import graft.streaming.PartitionedStore
-      val root = indexRoot("ivfplanner", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfplanner", dir),
+        streamUpsertedIvfIndex(spark, dir))
       val del = vectors(spark, dir).filter(delPredicate)
       val cents = spark.read.parquet(s"$root/centroids")
       PartitionedStore.deleteKeys(spark, s"$root/cells", "cent_id",
         assignToCentroids(del, cents), Seq("vec_id"))
-      val pre = planMaintenance(spark, root)
-      runMaintenance(spark, dir, root, pre)
-      (root, pre, planMaintenance(spark, root))
+      val pre = Maintenance.plan(spark, root)
+      Maintenance.run(spark, dir, root, pre)
+      (root, pre, Maintenance.plan(spark, root))
     }
 
   // ---- streaming serve against the persisted index (r11, judge item
@@ -2600,29 +2106,6 @@ object SimilarityQueries {
   // is routed and ranked independently, micro-batch boundaries cannot
   // change any query's result: the union over batches IS the batch
   // serve, which the oracle states exactly.
-
-  /** Crash-consistent read of a cent_id-partitioned index root that may
-    * have a FOLD in flight (the read-while-maintain form, ADVICE r9's
-    * read-path recovery put to work): complete any COMMITTED staging —
-    * serving pre-swap content would unwind a committed fold — but never
-    * discard an uncommitted one (the single writer may be live), then
-    * read cells ∪ landed ingest with the fold's keyed LWW dedup, so a
-    * row sitting in BOTH places during the swap-done-but-ingest-not-
-    * yet-cleared crash window counts exactly once. */
-  private[graft] def readIndexCells(spark: SparkSession,
-      root: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.streaming.PartitionedStore.recoverPendingDelete(
-      s"$root/cells", discardUncommitted = false)
-    val cells = spark.read.parquet(s"$root/cells")
-    if (!new java.io.File(s"$root/ingest").exists()) cells
-    else {
-      val byVec = Window.partitionBy(col("vec_id")).orderBy(col("cent_id"))
-      cells.unionByName(spark.read.parquet(s"$root/ingest").drop("bid"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1).drop("rn")
-    }
-  }
 
   /** Stream the vec_id%50=40 query set (2 micro-batches) against the
     * persisted TRAINED index — per batch: read-path recovery, route
@@ -2642,39 +2125,31 @@ object SimilarityQueries {
       dir: String): String = {
     import graft.streaming.{PartitionedStore, Streams}
     val root = trainedIvfIndex(spark, dir)
-    val out = indexRoot("ivfstreamserve", dir)
+    val out = IndexRoot("ivfstreamserve", dir)
     // pid-recycling guard: a recycled pid's stale results root could
     // carry bid= dirs outside this run's batch range
     PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_serve", dir)
-    GraftQuery.withShufflePartitions(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
+    Streams.drainStaged(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 40)
           .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // the serving job's view per trigger: recover-then-read,
-          // fresh routing table, pruned cell scan. Deliberately NOT
-          // under the online-serve regime (r16): measured job counts
-          // are identical either way (the probe plan's only exchange
-          // is a broadcast), and AQE's partition coalescing is what
-          // keeps each bid= landing ONE part file.
-          PartitionedStore.recoverPendingDelete(
-            s"$root/cells", discardUncommitted = false)
-          val cents = spark.read.parquet(s"$root/centroids")
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          probeServe(spark, s"$root/cells", "cell",
-            routeProbes(b, cents, nprobe = 2), "l2", 3)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        name, files = 4, filesPerTrigger = 2, partitions = 8) {
+      (batch: DataFrame, id: Long) =>
+        // the serving job's view per trigger: recover-then-read,
+        // fresh routing table, pruned cell scan. Deliberately NOT
+        // under the online-serve regime (r16): measured job counts
+        // are identical either way (the probe plan's only exchange
+        // is a broadcast), and AQE's partition coalescing is what
+        // keeps each bid= landing ONE part file.
+        PartitionedStore.recoverPendingDelete(
+          s"$root/cells", discardUncommitted = false)
+        val cents = spark.read.parquet(s"$root/centroids")
+        val b = batch.withColumn("norm2",
+          expr("vector_dot_dec(embedding, embedding)"))
+        probeServe(spark, s"$root/cells", "cell",
+          routeProbes(b, cents, nprobe = 2), "l2", 3)
+          .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2700,7 +2175,7 @@ object SimilarityQueries {
       dir: String): (String, ServeRecoverTrace) = {
     import graft.streaming.{PartitionedStore, Streams}
     val root = trainedIvfIndex(spark, dir)
-    val out = indexRoot("ivfservecrash", dir)
+    val out = IndexRoot("ivfservecrash", dir)
     PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_serve_recover", dir)
     val srcDir = Streams.stage(
@@ -2711,10 +2186,6 @@ object SimilarityQueries {
     val runs = scala.collection.concurrent.TrieMap.empty[Long, Int]
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     var bidsAtCrash: Seq[Long] = Seq.empty
-    def landedBids(): Seq[Long] =
-      Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("bid="))
-        .map(_.getName.stripPrefix("bid=").toLong).sorted
     GraftQuery.withShufflePartitions(spark, 8) {
       def start() = Streams.fileStream(spark, srcDir, filesPerTrigger = 2)
         .writeStream.queryName(name)
@@ -2732,7 +2203,7 @@ object SimilarityQueries {
           // injected crash: batch 1's results are on disk, its offsets
           // are not — the classic sink-landed/commit-lost window
           if (id == 1 && crashed.compareAndSet(false, true)) {
-            bidsAtCrash = landedBids()
+            bidsAtCrash = IndexLayout.generations(out)
             throw new RuntimeException("injected serve crash")
           }
           ()
@@ -2771,31 +2242,23 @@ object SimilarityQueries {
       dir: String): String = {
     import graft.streaming.Streams
     val root = persistedHnswIndex(spark, dir)
-    val out = indexRoot("hnswstreamserve", dir)
+    val out = IndexRoot("hnswstreamserve", dir)
     // pid-recycling guard, as in streamServedIndex
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_hnsw_serve", dir)
-    GraftQuery.withShufflePartitions(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
+    Streams.drainStaged(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 45)
           .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // the hop loop inside hnswServeFrame runs under the online-
-          // serve regime; the landing write stays adaptive on purpose
-          // (AQE coalescing keeps each bid= dir one part file — r16)
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          hnswServeFrame(spark, root, b, beamWidth = 32)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        name, files = 4, filesPerTrigger = 2, partitions = 8) {
+      (batch: DataFrame, id: Long) =>
+        // the hop loop inside hnswServeFrame runs under the online-
+        // serve regime; the landing write stays adaptive on purpose
+        // (AQE coalescing keeps each bid= dir one part file — r16)
+        val b = batch.withColumn("norm2",
+          expr("vector_dot_dec(embedding, embedding)"))
+        hnswServeFrame(spark, root, b, beamWidth = 32)
+          .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2813,30 +2276,22 @@ object SimilarityQueries {
       dir: String): String = {
     import graft.streaming.Streams
     val (rootF, _) = hierHnswIndexes(spark, dir)
-    val out = indexRoot("hnswhierstreamserve", dir)
+    val out = IndexRoot("hnswhierstreamserve", dir)
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
     val name = Streams.fresh("stream_index_hnsw_hier_serve", dir)
-    GraftQuery.withShufflePartitions(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
+    Streams.drainStaged(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 50 === 45)
           .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // entry descent + hop loop run under the online-serve
-          // regime; the landing write stays adaptive, as in
-          // streamHnswServedIndex (r16)
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          hierHnswServe(spark, rootF, b, beamWidth = 32)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        name, files = 4, filesPerTrigger = 2, partitions = 8) {
+      (batch: DataFrame, id: Long) =>
+        // entry descent + hop loop run under the online-serve
+        // regime; the landing write stays adaptive, as in
+        // streamHnswServedIndex (r16)
+        val b = batch.withColumn("norm2",
+          expr("vector_dot_dec(embedding, embedding)"))
+        hierHnswServe(spark, rootF, b, beamWidth = 32)
+          .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2844,7 +2299,7 @@ object SimilarityQueries {
   // ---- streaming serve × CONCURRENT maintenance (r12, closing r11
   // Missing #3): q_stream_index_serve proves the per-trigger serve
   // plan; this gate proves the read-while-maintain interaction the
-  // readIndexCells recovery machinery exists for — a fold COMMITS its
+  // IndexLayout.read recovery machinery exists for — a fold COMMITS its
   // staging between two serve micro-batches and crashes mid-swap (the
   // worst read-side moment: some cells swapped, some still staged,
   // ingest dirs still present), and the next trigger's serve must land
@@ -2870,49 +2325,42 @@ object SimilarityQueries {
   /** One streaming serve pass over the serve-maint index: queries
     * vec_id%25=19 in 2 micro-batches; from the second trigger on, any
     * pending ingest is folded with an injected mid-swap crash BEFORE
-    * the serve — the serve's readIndexCells recovery is what keeps the
+    * the serve — the serve's [[IndexLayout.read]] recovery keeps the
     * batch exact. Results land replay-safe under `out`/bid=. */
   private def runServeMaintStream(spark: SparkSession, dir: String,
       root: String, out: String): ServeMaintTrace = {
     import graft.streaming.Streams
-    val gens0 = Option(new java.io.File(s"$root/ingest").listFiles())
-      .toSeq.flatten.count(f => f.isDirectory && f.getName.startsWith("bid="))
+    val gens0 = IndexLayout.Cells.pendingGens(root)
     var crashTouched = 0
     var stagingAfterCrash = false
     var stagingAfterServe = false
     val marker = new java.io.File(
       s"$root/cells/_graft_staging_delete/_graft_touched")
     val name = Streams.fresh("stream_index_serve_maint", dir)
-    GraftQuery.withShufflePartitions(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
+    Streams.drainStaged(spark,
         Tables(spark, dir).embeddings
           .filter(col("vec_id") % 25 === 19)
           .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id >= 1 && new java.io.File(s"$root/ingest").exists()) {
-            // maintenance commits between triggers and dies mid-swap
-            crashTouched = foldIngest(spark, root, crashAfterSwaps = 1).size
-            stagingAfterCrash = marker.exists()
-          }
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          val all = readIndexCells(spark, root)
-          val cents = spark.read.parquet(s"$root/centroids")
-          val probes = b.join(assignToCentroids(b, cents), "vec_id")
-            .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
-              col("embedding").as("qemb"), col("norm2").as("qnorm2"))
-          probeServeFrames(spark, all, "cent_id", probes, "cos", 3)
-            .withColumnRenamed("score", "cos")
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          if (id >= 1) stagingAfterServe |= marker.getParentFile.exists()
-          ()
+        name, files = 4, filesPerTrigger = 2, partitions = 8) {
+      (batch: DataFrame, id: Long) =>
+        val landed = new java.io.File(IndexLayout.Cells.landedPath(root))
+        if (id >= 1 && landed.exists()) {
+          // maintenance commits between triggers and dies mid-swap
+          crashTouched =
+            IndexLayout.Cells.fold(spark, root, crashAfterSwaps = 1).size
+          stagingAfterCrash = marker.exists()
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        val b = batch.withColumn("norm2",
+          expr("vector_dot_dec(embedding, embedding)"))
+        val all = IndexLayout.Cells.read(spark, root)
+        val cents = spark.read.parquet(s"$root/centroids")
+        val probes = b.join(assignToCentroids(b, cents), "vec_id")
+          .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
+            col("embedding").as("qemb"), col("norm2").as("qnorm2"))
+        probeServeFrames(spark, all, "cent_id", probes, "cos", 3)
+          .withColumnRenamed("score", "cos")
+          .write.mode("overwrite").parquet(s"$out/bid=$id")
+        if (id >= 1) stagingAfterServe |= marker.getParentFile.exists()
     }
     ServeMaintTrace(gens0, crashTouched, stagingAfterCrash, stagingAfterServe)
   }
@@ -2927,20 +2375,18 @@ object SimilarityQueries {
   private[graft] def streamServeMaintIndex(spark: SparkSession,
       dir: String): (String, ServeMaintTrace) = {
     import graft.streaming.PartitionedStore
-    val root = indexRoot("ivfservemaint", dir)
-    val out = indexRoot("ivfservemaintout", dir)
-    // The memo runs the destructive removeTree/copyTree/stream build
+    val root = IndexRoot("ivfservemaint", dir)
+    val out = IndexRoot("ivfservemaintout", dir)
+    // The memo runs the destructive removeTree/copyOf/stream build
     // once (ADVICE r12); concurrent first callers wait for it, then take
     // the steady-state re-serve path like every later caller.
     var built = false
     val trace = serveMaintTraceCache((spark, dir)) {
-      PartitionedStore.removeTree(new java.io.File(root))
       PartitionedStore.removeTree(new java.io.File(out))
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      IndexRoot.copyOf(spark, root, streamUpsertedIvfIndex(spark, dir))
       val t = runServeMaintStream(spark, dir, root, out)
-      foldIngest(spark, root) // post-stream maintenance retry converges
+      // post-stream maintenance retry converges
+      IndexLayout.Cells.fold(spark, root)
       built = true
       t
     }
@@ -2972,7 +2418,7 @@ object SimilarityQueries {
       dir: String): String =
     streamPqCache((spark, dir)) {
       import graft.streaming.{PartitionedStore, Streams}
-      val root = indexRoot("ivfpqstream", dir)
+      val root = IndexRoot("ivfpqstream", dir)
       PartitionedStore.removeTree(new java.io.File(root))
       val v = vectors(spark, dir)
       // vec_ids are dense 0..n-1, so the 90% threshold IS the base count
@@ -2993,26 +2439,18 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/codes")
       val name = Streams.fresh("stream_index_pq", dir)
-      GraftQuery.withShufflePartitions(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") >= b)
             .select(col("vec_id"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val bb = batch.withColumn("norm2",
-              expr("vector_dot_dec(embedding, embedding)"))
-            val (codesI, _) = pqCodesLuts(pqSlices(bb), cb)
-            codesI.join(assignToCentroids(bb, cents), "vec_id")
-              .write.mode("overwrite").partitionBy("cent_id")
-              .parquet(s"$root/codes_ingest/bid=$id")
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+          name, files = 4, filesPerTrigger = 2, partitions = 8) {
+        (batch: DataFrame, id: Long) =>
+          val bb = batch.withColumn("norm2",
+            expr("vector_dot_dec(embedding, embedding)"))
+          val (codesI, _) = pqCodesLuts(pqSlices(bb), cb)
+          codesI.join(assignToCentroids(bb, cents), "vec_id")
+            .write.mode("overwrite").partitionBy("cent_id")
+            .parquet(IndexLayout.Codes.generation(root, id))
       }
       root
     }
@@ -3022,54 +2460,32 @@ object SimilarityQueries {
   // codes_ingest/bid= with the same write-optimized→read-optimized
   // asymmetry the raw tier's fold closed in r10 — and the codes tier is
   // the one a billion-vector store actually SERVES from, so file decay
-  // there is the decay that matters. The fold is foldIngest verbatim on
-  // the (codes, codes_ingest) pair (the layouts share the vec_id-keyed,
-  // cent_id-partitioned shape), and the PLANNER observes the tier
+  // there is the decay that matters. [[IndexLayout.Codes]] folds the
+  // (codes, codes_ingest) pair exactly as the raw cells (the layouts
+  // share the vec_id-keyed, cent_id-partitioned shape), and the
+  // PLANNER observes the tier
   // through the same signals (pending bid= generations, per-cell file
   // counts) with the retrain dial off — re-clustering the coarse
   // quantizer would invalidate every stored code, so a drifted codes
   // tier is repaired by re-encoding against a retrained RAW tier, an
   // external decision like deletes.
 
-  /** Execute a codes-tier plan: fold landed code generations, then
-    * compact over-bound code cells. Never retrains (see
-    * [[planMaintenance]]'s trackImbalance doc). */
-  private[graft] def runCodesMaintenance(spark: SparkSession,
-      root: String, plan: MaintenancePlan): Unit = {
-    if (plan.fold)
-      foldIngest(spark, root, cellsSub = "codes", ingestSub = "codes_ingest")
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/codes", "cent_id", plan.maxFiles)
-    ()
-  }
-
-  /** Codes-tier planner read: pending codes_ingest generations +
-    * per-cell code-file counts; imbalance intentionally untracked. */
-  private[graft] def planCodesMaintenance(spark: SparkSession,
-      root: String): MaintenancePlan =
-    planMaintenance(spark, root, cellsSub = "codes",
-      ingestSub = "codes_ingest", trackImbalance = false)
-
-  private val foldPqCache =
-    new Memo[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val foldPqCache = new Memo[(SparkSession, String),
+    (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan)]
 
   /** Memoized: copy the streamed PQ index (pending codes_ingest bid=
     * generations), plan the codes tier, execute (fold + compact), and
     * re-plan; returns (root, pre, post) — the gate serves from the
     * folded codes alone, the spec pins the decisions and the post-fold
     * signals. */
-  private[graft] def foldedPqIndex(spark: SparkSession,
-      dir: String): (String, MaintenancePlan, MaintenancePlan) =
+  private[graft] def foldedPqIndex(spark: SparkSession, dir: String)
+      : (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan) =
     foldPqCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("ivfpqfold", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(streamPqIndex(spark, dir)),
-        new java.io.File(root))
-      val pre = planCodesMaintenance(spark, root)
-      runCodesMaintenance(spark, root, pre)
-      (root, pre, planCodesMaintenance(spark, root))
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfpqfold", dir),
+        streamPqIndex(spark, dir))
+      val pre = Maintenance.plan(spark, root, IndexLayout.Codes)
+      Maintenance.run(spark, dir, root, pre)
+      (root, pre, Maintenance.plan(spark, root, IndexLayout.Codes))
     }
 
   // ---- persisted FILTERED ANN (r10, extending q_sim_filtered to the
@@ -3090,7 +2506,7 @@ object SimilarityQueries {
   private[graft] def filteredIvfIndex(spark: SparkSession,
       dir: String): String =
     filteredIvfCache((spark, dir)) {
-      val root = indexRoot("ivffiltered", dir)
+      val root = IndexRoot("ivffiltered", dir)
       val v = vectors(spark, dir)
       v.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
@@ -3239,109 +2655,8 @@ object SimilarityQueries {
   // two-level address — a drifted filtered layout is re-derived from a
   // retrained raw tier, an external decision like deletes.
 
-  /** The filtered layout's signals + implied decisions. `overBound`
-    * keys are (label, cent_id) dir-name tuples; `labelImbalance` is the
-    * per-label max_cell·n_cells/n_rows factor (observability only —
-    * never a planner action here, see the block comment). */
-  final case class FilteredMaintenancePlan(pendingGens: Int,
-      overBound: Seq[Seq[String]], labelImbalance: Map[String, Double],
-      maxFiles: Int) {
-    def fold: Boolean = pendingGens > 0
-    def compact: Boolean = overBound.nonEmpty
-    def maxImbalance: Double =
-      if (labelImbalance.isEmpty) 0.0 else labelImbalance.values.max
-    def actions: Seq[String] =
-      Seq("fold" -> fold, "compact" -> compact)
-        .collect { case (a, true) => a }
-  }
-
-  /** Read the (label, cent_id) layout's maintenance signals: pending
-    * bid= generations and per-leaf file counts from the directory
-    * layout (driver metadata, ≤ labels×cells tuples), per-label
-    * imbalance from one aggregation over cells ∪ landed ingest. Empty/
-    * missing layouts read healthy (the planMaintenance contract). */
-  private[graft] def planFilteredMaintenance(spark: SparkSession,
-      root: String,
-      maxFiles: Int = PLANNER_MAX_FILES): FilteredMaintenancePlan = {
-    import graft.streaming.PartitionedStore
-    val gens = Option(new java.io.File(s"$root/ingest").listFiles())
-      .toSeq.flatten
-      .count(f => f.isDirectory && f.getName.startsWith("bid="))
-    val cellsPath = s"$root/cells"
-    val counts =
-      if (!PartitionedStore.exists(cellsPath)) Map.empty[Seq[String], Int]
-      else PartitionedStore.partFileCounts(cellsPath, Seq("label", "cent_id"))
-    val over = counts.filter(_._2 > maxFiles).keys.toSeq
-      .sortBy(_.mkString("/"))
-    val imb: Map[String, Double] =
-      if (counts.values.sum == 0) Map.empty
-      else {
-        val live = spark.read.parquet(cellsPath)
-          .select(col("vec_id"), col("label"), col("cent_id"))
-        val all = if (gens > 0)
-          live.unionByName(spark.read.parquet(s"$root/ingest").drop("bid")
-            .select(col("vec_id"), col("label"), col("cent_id")))
-        else live
-        all.groupBy(col("label"), col("cent_id")).agg(count(lit(1)).as("n"))
-          .groupBy(col("label")).agg(count(lit(1)).as("c"),
-            sum(col("n")).as("rows"), max(col("n")).as("mx"))
-          .collect().map { r =>
-            r.get(0).toString -> (if (r.getLong(2) == 0L) 0.0
-              else r.getLong(3).toDouble * r.getLong(1) / r.getLong(2))
-          }.toMap
-      }
-    FilteredMaintenancePlan(gens, over, imb, maxFiles)
-  }
-
-  /** Fold the filtered layout's landed bid= generations into the
-    * (label, cent_id) base leaves — foldIngest's exact discipline one
-    * partition level deeper: touched (label, cell) pairs are driver
-    * metadata from the landed rows, the live read prunes to exactly
-    * those leaves (labelBatchedPrune — O(labels) plan), keyed LWW dedup
-    * by vec_id, staged multi-level swap, landed dirs removed last.
-    * Crash anywhere → the next fold completes the committed swaps and
-    * re-merges idempotently. Returns the touched pairs. */
-  private[graft] def foldFilteredIngest(spark: SparkSession, root: String,
-      crashAfterSwaps: Int = Int.MaxValue): Seq[(Any, Any)] = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.streaming.PartitionedStore
-    val ingestDir = new java.io.File(s"$root/ingest")
-    PartitionedStore.recoverPendingDelete(s"$root/cells")
-    if (!ingestDir.exists()) return Seq.empty
-    val ingest = spark.read.parquet(s"$root/ingest").drop("bid")
-    val touched = ingest.select(col("label"), col("cent_id")).distinct()
-      .collect().map(r => (r.get(0), r.get(1))).toSeq
-    if (touched.nonEmpty) {
-      val live = spark.read.parquet(s"$root/cells")
-        .filter(labelBatchedPrune(touched))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("label"), col("cent_id"))
-      val merged = Scratch.checkpoint(
-        live.unionByName(ingest)
-          .withColumn("rn", row_number().over(byVec))
-          .filter(col("rn") === 1).drop("rn")
-          .repartition(col("label"), col("cent_id")))
-      PartitionedStore.replacePartitions(spark, s"$root/cells",
-        Seq("label", "cent_id"), merged,
-        touched.map(t => Seq(t._1, t._2)), crashAfterSwaps)
-      if (crashAfterSwaps < touched.size) return touched
-    }
-    PartitionedStore.removeTree(ingestDir)
-    touched
-  }
-
-  /** Execute the filtered layout's planned repairs: fold first, then
-    * the two-level compact — the raw tier's dependency order. */
-  private[graft] def runFilteredMaintenance(spark: SparkSession,
-      root: String, plan: FilteredMaintenancePlan): Unit = {
-    if (plan.fold) foldFilteredIngest(spark, root)
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/cells", Seq("label", "cent_id"), plan.maxFiles)
-    ()
-  }
-
   private val filteredPlannerCache = new Memo[(SparkSession, String),
-    (String, FilteredMaintenancePlan, FilteredMaintenancePlan)]
+    (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan)]
 
   /** Apply the filtered-planner scenario's wear to a fresh copy of the
     * (label, cent_id) layout at `root` — three ways: a staged-swap
@@ -3355,10 +2670,7 @@ object SimilarityQueries {
   private[graft] def wearFilteredLayout(spark: SparkSession, dir: String,
       root: String): Unit = {
     import graft.streaming.PartitionedStore
-    PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(filteredIvfIndex(spark, dir)),
-      new java.io.File(root))
+    IndexRoot.copyOf(spark, root, filteredIvfIndex(spark, dir))
     val cents = spark.read.parquet(s"$root/centroids")
     val del = vectors(spark, dir).filter(delPredicate)
     PartitionedStore.deleteKeys(spark, s"$root/cells",
@@ -3371,9 +2683,10 @@ object SimilarityQueries {
     Seq(0, 1).foreach { b =>
       arrivals.filter(col("vec_id") % 20 === (if (b == 0) 3 else 13))
         .write.mode("overwrite").partitionBy("label", "cent_id")
-        .parquet(s"$root/ingest/bid=$b")
+        .parquet(IndexLayout.Filtered.generation(root, b))
     }
-    val touchedByIngest = spark.read.parquet(s"$root/ingest")
+    val touchedByIngest = spark.read
+      .parquet(IndexLayout.Filtered.landedPath(root))
       .select(col("label"), col("cent_id")).distinct()
       .collect().map(r => (r.get(0).toString, r.get(1).toString)).toSet
     val splitPairs = PartitionedStore
@@ -3393,13 +2706,13 @@ object SimilarityQueries {
   /** Memoized filtered-planner scenario: wear ([[wearFilteredLayout]])
     * → plan → execute → re-plan. */
   private[graft] def plannedFilteredIndex(spark: SparkSession, dir: String)
-      : (String, FilteredMaintenancePlan, FilteredMaintenancePlan) =
+      : (String, Maintenance.MaintenancePlan, Maintenance.MaintenancePlan) =
     filteredPlannerCache((spark, dir)) {
-      val root = indexRoot("ivffilteredplanner", dir)
+      val root = IndexRoot("ivffilteredplanner", dir)
       wearFilteredLayout(spark, dir, root)
-      val pre = planFilteredMaintenance(spark, root)
-      runFilteredMaintenance(spark, root, pre)
-      (root, pre, planFilteredMaintenance(spark, root))
+      val pre = Maintenance.plan(spark, root, IndexLayout.Filtered)
+      Maintenance.run(spark, dir, root, pre)
+      (root, pre, Maintenance.plan(spark, root, IndexLayout.Filtered))
     }
 
   // ---- persisted COMPRESSED index (r10 extension): every raw layout
@@ -3425,7 +2738,7 @@ object SimilarityQueries {
   private[graft] def persistedPqIndex(spark: SparkSession,
       dir: String): String =
     pqIndexCache((spark, dir)) {
-      val root = indexRoot("ivfpqindex", dir)
+      val root = IndexRoot("ivfpqindex", dir)
       val v = vectors(spark, dir)
       val nn = v.agg(count(lit(1)).as("n"))
       v.crossJoin(broadcast(nn))
@@ -3607,11 +2920,8 @@ object SimilarityQueries {
   private[graft] def retrainedIvfIndex(spark: SparkSession,
       dir: String): (String, DataFrame, DataFrame) =
     retrainCache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("ivfretrain", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(upsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfretrain", dir),
+        upsertedIvfIndex(spark, dir))
       val (asg0, asg1, _) = warmStartRetrain(spark, dir, root)
       (root, asg0, asg1)
     }
@@ -3644,12 +2954,8 @@ object SimilarityQueries {
   private[graft] def multiRoundRetrainedIndex(spark: SparkSession,
       dir: String): (String, Seq[(Int, Long, Long)]) =
     retrain2Cache((spark, dir)) {
-      import graft.streaming.PartitionedStore
-      val root = indexRoot("ivfretrain2", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(upsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfretrain2", dir),
+        upsertedIvfIndex(spark, dir))
       val rows = Seq.newBuilder[(Int, Long, Long)]
       var r = 1
       var go = true
@@ -3749,7 +3055,7 @@ object SimilarityQueries {
     * write partitioned by cell under the batch's own bid= dir. */
   private[graft] def landIngestBatch(batch: DataFrame, id: Long,
       root: String, cents: DataFrame): Unit = {
-    val target = s"$root/ingest/bid=$id"
+    val target = IndexLayout.Cells.generation(root, id)
     val raw = batch.withColumn("norm2",
       expr("vector_dot_dec(embedding, embedding)"))
     // redelivery of an already-landed bid reads from the dir this write
@@ -3771,28 +3077,19 @@ object SimilarityQueries {
       dir: String): String =
     streamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
-      val root = indexRoot("ivfstreamupsert", dir)
-      // seedFromIvfBase clears the whole root first — stale
-      // $root/ingest/bid= dirs from a crashed same-pid predecessor
-      // would otherwise be unioned into the serve (ADVICE r10)
-      seedFromIvfBase(spark, dir, root)
+      // copyOf clears the whole root first — stale $root/ingest/bid=
+      // dirs from a crashed same-pid predecessor would otherwise be
+      // unioned into the serve (ADVICE r10)
+      val root = IndexRoot.copyOf(spark, IndexRoot("ivfstreamupsert", dir),
+        baseIvfLayout(spark, dir))
       val cents = spark.read.parquet(s"$root/centroids")
       val name = Streams.fresh("stream_index_upsert", dir)
-      GraftQuery.withShufflePartitions(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).embeddings
             .filter(col("vec_id") % 10 === 9)
             .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landIngestBatch(batch, id, root, cents); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-      }
+          name, files = 4, filesPerTrigger = 2, partitions = 8)(
+        landIngestBatch(_, _, root, cents))
       root
     }
 
@@ -3945,7 +3242,7 @@ object SimilarityQueries {
   private[graft] def trainedIvfIndex(spark: SparkSession,
       dir: String): String =
     trainedIvfCache((spark, dir)) {
-      val root = indexRoot("ivftrained", dir)
+      val root = IndexRoot("ivftrained", dir)
       val (cent, _, _) = kmeansRounds(spark, dir, withInertia = false)
       cent.write.mode("overwrite").parquet(s"$root/centroids")
       val v = vectors(spark, dir)
@@ -4002,19 +3299,11 @@ object SimilarityQueries {
       dir: String): String =
     deletedIvfCache((spark, dir)) {
       import graft.streaming.PartitionedStore
-      val root = indexRoot("ivfdeleted", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(persistedIvfIndex(spark, dir)),
-        new java.io.File(s"$root/sqrt"))
-      PartitionedStore.copyTree(
-        new java.io.File(trainedIvfIndex(spark, dir)),
-        new java.io.File(s"$root/trained"))
-      PartitionedStore.copyTree(
-        new java.io.File(persistedPqIndex(spark, dir)),
-        new java.io.File(s"$root/pq"))
-      PartitionedStore.copyTree(
-        new java.io.File(filteredIvfIndex(spark, dir)),
-        new java.io.File(s"$root/filtered"))
+      val root = IndexRoot("ivfdeleted", dir)
+      IndexRoot.copyOf(spark, s"$root/sqrt", persistedIvfIndex(spark, dir))
+      IndexRoot.copyOf(spark, s"$root/trained", trainedIvfIndex(spark, dir))
+      IndexRoot.copyOf(spark, s"$root/pq", persistedPqIndex(spark, dir))
+      IndexRoot.copyOf(spark, s"$root/filtered", filteredIvfIndex(spark, dir))
       val del = vectors(spark, dir).filter(delPredicate)
       // touched cells from the delete set's own assignment — O(deleted×C),
       // never an index scan
@@ -5038,7 +4327,7 @@ object SimilarityQueries {
       }
     },
 
-    // ---- hier-layer maintenance (see the planHierMaintenance block):
+    // ---- hier-layer maintenance (see the hier-layer maintenance block):
     // a hard delete with dead-hub repair leaves the layer tables stale
     // — dead hubs keep their layer-0 rows, re-elected hubs have none —
     // and the planner observes the drift by IDENTITY (stored ehub /
@@ -5189,7 +4478,7 @@ object SimilarityQueries {
     // stream-land under bid= generations on a hier-carrying layout,
     // the planner folds them, a delete wave triggers the repair —
     // wholesale hub re-election over the live corpus — and
-    // runGraphMaintenance's wired hier stage re-derives the layer
+    // Maintenance.runGraph's wired hier stage re-derives the layer
     // tables from the repaired hubs, so the hierarchical serve that
     // follows descends through REFRESHED layers. The oracle is the
     // repair scenario's preamble (fold ∪ ≡ batch append — the
@@ -5726,15 +5015,13 @@ object SimilarityQueries {
       "streaming PQ encode-on-ingest: frozen-codebook per-batch codes, union serve equals batch rebuild",
       STREAM_PQ_SERVE_SQL) { (spark, dir) =>
       val root = streamPqIndex(spark, dir)
-      val allCodes = spark.read.parquet(s"$root/codes")
-        .unionByName(spark.read.parquet(s"$root/codes_ingest").drop("bid"))
       pqServeCodes(spark, dir,
         spark.read.parquet(s"$root/codebook"),
         spark.read.parquet(s"$root/centroids"),
-        allCodes, col("vec_id") % 50 === 35)
+        IndexLayout.Codes.union(spark, root), col("vec_id") % 50 === 35)
     },
 
-    // ---- codes-tier fold (see the runCodesMaintenance block): the
+    // ---- codes-tier fold (see the codes-tier fold block): the
     // planner reads the compressed layout's own wear (pending
     // codes_ingest bid= generations), the fold staged-swaps them into
     // the base codes cells, and the serve reads codes ALONE —
@@ -5818,8 +5105,7 @@ object SimilarityQueries {
       "streaming ingest -> frozen-centroid index upsert (replay-safe per-batch landing), then serve",
       upsertServeSql("vec_id % 25 = 19")) { (spark, dir) =>
       val root = streamUpsertedIvfIndex(spark, dir)
-      val cells = spark.read.parquet(s"$root/cells")
-        .unionByName(spark.read.parquet(s"$root/ingest").drop("bid"))
+      val cells = IndexLayout.Cells.union(spark, root)
       val probes = cells.filter(col("vec_id") % 25 === 19)
         .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
           col("embedding").as("qemb"), col("norm2").as("qnorm2"))
@@ -5956,7 +5242,7 @@ object SimilarityQueries {
           col("n_moved"), col("n_changed_cells"))
     },
 
-    // ---- ingest fold (see the foldIngest block): the streamed bid=
+    // ---- ingest fold (see the ingest fold block): the streamed bid=
     // generations merge into the base cell layout via the staged swap
     // (keyed, so a crash-retry converges), the bid= dirs are removed,
     // and the serve reads cells ALONE — hash-identical to the
@@ -5989,7 +5275,7 @@ object SimilarityQueries {
       spark.read.parquet(out).drop("bid")
     },
 
-    // ---- stats-driven maintenance planner (see the planMaintenance
+    // ---- stats-driven maintenance planner (see [[Maintenance]]
     // block): the streamed index accumulates real wear — pending bid=
     // ingest generations, multi-generation cell dirs, a staged-swap
     // delete (vec_id%10=3) — then ONE planner pass reads the layout's
@@ -6343,7 +5629,7 @@ object SimilarityQueries {
       filteredLayoutServe(spark, filteredIvfIndex(spark, dir))
     },
 
-    // ---- filtered-layout planner (see the planFilteredMaintenance
+    // ---- filtered-layout planner (see the filtered-layout maintenance
     // block, r12 judge item #3): the two-level layout accumulates real
     // wear — a staged-swap delete (vec_id%10=3), the deleted slice
     // re-arriving as two landed bid= generations, and multi-file leaves
@@ -7180,43 +6466,34 @@ object SimilarityQueries {
       import graft.streaming.Streams
       val name = Streams.fresh("stream_embed", dir)
       val root = s"${Streams.scratchRoot}/embed/$name"
-      GraftQuery.withShufflePartitions(spark, 8) {
-        val c = vectors(spark, dir).filter(col("vec_id") < 16).select(
-          col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-          col("norm2").as("cnorm2"))
-        val src = Streams.stagedFileStream(spark,
+      val c = vectors(spark, dir).filter(col("vec_id") < 16).select(
+        col("vec_id").as("cent_id"), col("embedding").as("cemb"),
+        col("norm2").as("cnorm2"))
+      val byVec = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos_c").desc, col("cent_id"))
+      Streams.drainStaged(spark,
           Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val byVec = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_c").desc, col("cent_id"))
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // partials for THIS batch id only; mode=overwrite makes a
-            // replayed id rewrite (not double-count) its contribution
-            batch
-              .withColumn("norm2", expr("vector_dot_dec(embedding, embedding)"))
-              .crossJoin(broadcast(c))
-              .select(col("vec_id"), col("cent_id"),
-                cosExact("embedding", "cemb",
-                  sqrt(col("norm2") * col("cnorm2"))).as("cos_c"))
-              .withColumn("rn", row_number().over(byVec))
-              .filter(col("rn") === 1)
-              .groupBy(col("cent_id"))
-              .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("sum_vec_id"))
-              .write.mode("overwrite").parquet(s"$root/batch_id=$id")
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        // serve-time roll-up across batch partials (16 rows × n_batches)
-        spark.read.parquet(root)
-          .groupBy(col("cent_id"))
-          .agg(sum(col("n_vectors")).cast("long").as("n_vectors"),
-            sum(col("sum_vec_id")).cast("long").as("sum_vec_id"))
+          name, files = 4, filesPerTrigger = 2, partitions = 8) {
+        (batch: DataFrame, id: Long) =>
+          // partials for THIS batch id only; mode=overwrite makes a
+          // replayed id rewrite (not double-count) its contribution
+          batch
+            .withColumn("norm2", expr("vector_dot_dec(embedding, embedding)"))
+            .crossJoin(broadcast(c))
+            .select(col("vec_id"), col("cent_id"),
+              cosExact("embedding", "cemb",
+                sqrt(col("norm2") * col("cnorm2"))).as("cos_c"))
+            .withColumn("rn", row_number().over(byVec))
+            .filter(col("rn") === 1)
+            .groupBy(col("cent_id"))
+            .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("sum_vec_id"))
+            .write.mode("overwrite").parquet(s"$root/batch_id=$id")
       }
+      // serve-time roll-up across batch partials (16 rows × n_batches)
+      spark.read.parquet(root)
+        .groupBy(col("cent_id"))
+        .agg(sum(col("n_vectors")).cast("long").as("n_vectors"),
+          sum(col("sum_vec_id")).cast("long").as("sum_vec_id"))
     }
   )
 }

@@ -663,30 +663,22 @@ object StreamQueries {
       import graft.streaming.SnapshotStore
       val name = Streams.fresh("stream_cdc", dir)
       val snap = s"${Streams.scratchRoot}/cdc/$name/snap"
-      GraftQuery.withShufflePartitions(spark, 4) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"), col("user_id"),
               col("event_type"), col("value")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SnapshotStore.mergeLww(spark, snap,
-              batch.select(col("event_id"), col("ts"), col("user_id"),
-                col("event_type"), col("value")),
-              keys = Seq("user_id"),
-              ordering = Seq(col("ts").desc, col("event_id").desc))
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        SnapshotStore.read(spark, snap)
-          .filter(col("event_type") =!= "error")
-          .select(col("user_id"), col("ts").as("last_ts"),
-            col("value").as("last_value"))
+          name, files = 4, filesPerTrigger = 2, partitions = 4) {
+        (batch: DataFrame, _: Long) =>
+          SnapshotStore.mergeLww(spark, snap,
+            batch.select(col("event_id"), col("ts"), col("user_id"),
+              col("event_type"), col("value")),
+            keys = Seq("user_id"),
+            ordering = Seq(col("ts").desc, col("event_id").desc))
       }
+      SnapshotStore.read(spark, snap)
+        .filter(col("event_type") =!= "error")
+        .select(col("user_id"), col("ts").as("last_ts"),
+          col("value").as("last_value"))
     },
 
     // ---- the CDC maintenance loop WITH its retention pass (r8 judge
@@ -718,24 +710,18 @@ object StreamQueries {
       val name = Streams.fresh("stream_cdc_compact", dir)
       val snap = s"${Streams.scratchRoot}/cdc/$name/snap"
       GraftQuery.withShufflePartitions(spark, 4) {
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).events
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"), col("value")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        Streams.drainStaged(spark,
+            Tables(spark, dir).events
+              .select(col("event_id"), col("ts"), col("user_id"),
+                col("event_type"), col("value")),
+            name, files = 4, filesPerTrigger = 2, partitions = 4) {
+          (batch: DataFrame, _: Long) =>
             SnapshotStore.mergeLww(spark, snap,
               batch.select(col("event_id"), col("ts"), col("user_id"),
                 col("event_type"), col("value")),
               keys = Seq("user_id"),
               ordering = Seq(col("ts").desc, col("event_id").desc))
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        }
         // bulk import: one row per NEW key (user_id + 10000), landed as
         // three append generations in the recorded bucket layout
         val bc = SnapshotStore.bucketCount(snap)
@@ -827,50 +813,41 @@ object StreamQueries {
             .as("jb"))
         .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
         .agg(sum(col("wc")).as("c"))
-      GraftQuery.withShufflePartitions(spark, 4) {
-        var lastId = -1L
-        val src = Streams.stagedFileStream(spark,
+      var lastId = -1L
+      Streams.drainStaged(spark,
           Tables(spark, dir).documents.select(col("doc_id"), col("text")),
-          name, files = 4, filesPerTrigger = 1)
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val delta = cellsOf(batch)
-            val merged = (if (id > 0)
-              Some(spark.read.parquet(s"$root/v${id - 1}")) else None)
-              .map(_.unionByName(delta)
-                .groupBy(col("j"), col("b"))
-                .agg(sum(col("c")).as("c")))
-              .getOrElse(delta)
-            merged.coalesce(1).write.mode("overwrite").parquet(s"$root/v$id")
-            lastId = math.max(lastId, id)
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        // serve from the MAINTAINED cells; the exact audit rides the
-        // batch table (q_text_cms's probe shape)
-        val cells = spark.read.parquet(s"$root/v$lastId")
-        val exact = Tables(spark, dir).documents
-          .select(explode(filter(split(lower(col("text")), "\\W+"),
-            w => w =!= "")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("exact_count"))
-        val probes = exact
-          .select(col("w"), col("exact_count"),
-            explode(array((0 until 4).map(j =>
-              struct(lit(j.toLong).as("j"), bucket(j, col("w")).as("b"))): _*))
-              .as("jb"))
-          .select(col("w"), col("exact_count"),
-            col("jb.j").as("j"), col("jb.b").as("b"))
-        probes.join(broadcast(cells), Seq("j", "b"))
-          .groupBy(col("w"), col("exact_count"))
-          .agg(min(col("c")).as("est_count"))
-          .orderBy(col("est_count").desc, col("w").asc)
-          .limit(20)
-          .select(col("w").as("token"), col("est_count"), col("exact_count"))
+          name, files = 4, filesPerTrigger = 1, partitions = 4) {
+        (batch: DataFrame, id: Long) =>
+          val delta = cellsOf(batch)
+          val merged = (if (id > 0)
+            Some(spark.read.parquet(s"$root/v${id - 1}")) else None)
+            .map(_.unionByName(delta)
+              .groupBy(col("j"), col("b"))
+              .agg(sum(col("c")).as("c")))
+            .getOrElse(delta)
+          merged.coalesce(1).write.mode("overwrite").parquet(s"$root/v$id")
+          lastId = math.max(lastId, id)
       }
+      // serve from the MAINTAINED cells; the exact audit rides the
+      // batch table (q_text_cms's probe shape)
+      val cells = spark.read.parquet(s"$root/v$lastId")
+      val exact = Tables(spark, dir).documents
+        .select(explode(filter(split(lower(col("text")), "\\W+"),
+          w => w =!= "")).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("exact_count"))
+      val probes = exact
+        .select(col("w"), col("exact_count"),
+          explode(array((0 until 4).map(j =>
+            struct(lit(j.toLong).as("j"), bucket(j, col("w")).as("b"))): _*))
+            .as("jb"))
+        .select(col("w"), col("exact_count"),
+          col("jb.j").as("j"), col("jb.b").as("b"))
+      probes.join(broadcast(cells), Seq("j", "b"))
+        .groupBy(col("w"), col("exact_count"))
+        .agg(min(col("c")).as("est_count"))
+        .orderBy(col("est_count").desc, col("w").asc)
+        .limit(20)
+        .select(col("w").as("token"), col("est_count"), col("exact_count"))
     },
 
     // ---- incremental view maintenance (IVM) with retractions: a
@@ -919,96 +896,87 @@ object StreamQueries {
       val name = Streams.fresh("stream_ivm", dir)
       val root = s"${Streams.scratchRoot}/ivm/$name"
       val snap = s"$root/snap"
-      GraftQuery.withShufflePartitions(spark, 4) {
-        // 2 micro-batches: retraction maintenance is fully exercised by
-        // any split (keys recur across batches, so old rows retract and
-        // merged rows insert every batch); more batches only multiply
-        // the per-trigger floor of the bucketed merge at gate scale
-        val src = Streams.stagedFileStream(spark,
+      // 2 micro-batches: retraction maintenance is fully exercised by
+      // any split (keys recur across batches, so old rows retract and
+      // merged rows insert every batch); more batches only multiply
+      // the per-trigger floor of the bucketed merge at gate scale
+      var lastId = -1L
+      val latest = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts").desc, col("event_id").desc)
+      def visible(df: DataFrame) = df.filter(col("event_type") =!= "error")
+      // exact per-row weight contribution: value quantized once at
+      // scale 6 (dec_scaled, the engine's exact-sum kit), then signed
+      def contrib(df: DataFrame, w: Int) = visible(df).select(
+        col("event_type"),
+        lit(w.toLong).as("w"),
+        (call_function("dec_scaled", col("value"), lit(6))
+          .cast("decimal(38,0)") * w).cast("decimal(38,0)").as("sv"))
+      Streams.drainStaged(spark,
           Tables(spark, dir).events
             .select(col("event_id"), col("ts"), col("user_id"),
               col("event_type"), col("value")),
-          name, files = 4, filesPerTrigger = 2)
-        var lastId = -1L
-        val latest = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        def visible(df: DataFrame) = df.filter(col("event_type") =!= "error")
-        // exact per-row weight contribution: value quantized once at
-        // scale 6 (dec_scaled, the engine's exact-sum kit), then signed
-        def contrib(df: DataFrame, w: Int) = visible(df).select(
-          col("event_type"),
-          lit(w.toLong).as("w"),
-          (call_function("dec_scaled", col("value"), lit(6))
-            .cast("decimal(38,0)") * w).cast("decimal(38,0)").as("sv"))
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val incoming = batch.select(col("event_id"), col("ts"),
-              col("user_id"), col("event_type"), col("value"))
-            val deltaPath = s"$root/delta/v$id"
-            // ONE checkpointed pruned read of the touched buckets feeds
-            // both the delta computation and the snapshot merge (calling
-            // mergeLww would re-read them — a whole extra job per batch).
-            // LAZY (r16): the snapshot advance is now a staged swap
-            // (overwriteTouched writes the invisible staging dir and
-            // renames in), so the read-under-overwrite hazard the eager
-            // checkpoint used to guard is structurally impossible — the
-            // delta write below materializes the frame, dropping one
-            // count job per batch.
-            val touched = SnapshotStore.touchedBuckets(incoming, Seq("user_id"))
-            val prevTouched = Scratch.checkpointLazy(
-              if (SnapshotStore.exists(snap))
-                SnapshotStore.readBuckets(spark, snap, touched)
-              else incoming.limit(0))
-            if (!new java.io.File(deltaPath).exists()) {
-              // old state of ONLY the touched keys: bucket-pruned dirs,
-              // then the keyed semi-join — at 100 TB the scan touches
-              // the batch's buckets, never the table
-              val keys = incoming.select(col("user_id")).distinct()
-              val old = prevTouched.join(keys, "user_id")
-              val newRows = old.unionByName(incoming)
-                .withColumn("rn", row_number().over(latest))
-                .filter(col("rn") === 1).drop("rn")
-              contrib(old, -1).unionByName(contrib(newRows, 1))
-                .groupBy(col("event_type"))
-                .agg(sum(col("w")).as("dc"),
-                  sum(col("sv")).cast("decimal(38,0)").as("ds"))
-                .coalesce(1).write.mode("overwrite").parquet(deltaPath)
-            }
-            val delta = spark.read.parquet(deltaPath)
-            val prevAgg = (if (id > 0)
-              Some(spark.read.parquet(s"$root/agg/v${id - 1}")) else None)
-              .getOrElse(delta.limit(0)
-                .select(col("event_type"), col("dc").as("cnt"),
-                  col("ds").as("s")))
-            val nextAgg = prevAgg.as("a")
-              .join(delta.as("d"), Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("cnt"), lit(0L))
-                  + coalesce(col("dc"), lit(0L))).as("cnt"),
-                (coalesce(col("s"), lit(BigDecimal(0)).cast("decimal(38,0)"))
-                  + coalesce(col("ds"), lit(BigDecimal(0)).cast("decimal(38,0)")))
-                  .cast("decimal(38,0)").as("s"))
-              .filter(col("cnt") > 0)
-            nextAgg.write.mode("overwrite").parquet(s"$root/agg/v$id")
-            // snapshot advances by the bucketed partition-pruned merge,
-            // reusing the checkpointed touched-bucket read from above
-            val merged = prevTouched.unionByName(incoming)
+          name, files = 4, filesPerTrigger = 2, partitions = 4) {
+        (batch: DataFrame, id: Long) =>
+          val incoming = batch.select(col("event_id"), col("ts"),
+            col("user_id"), col("event_type"), col("value"))
+          val deltaPath = s"$root/delta/v$id"
+          // ONE checkpointed pruned read of the touched buckets feeds
+          // both the delta computation and the snapshot merge (calling
+          // mergeLww would re-read them — a whole extra job per batch).
+          // LAZY (r16): the snapshot advance is now a staged swap
+          // (overwriteTouched writes the invisible staging dir and
+          // renames in), so the read-under-overwrite hazard the eager
+          // checkpoint used to guard is structurally impossible — the
+          // delta write below materializes the frame, dropping one
+          // count job per batch.
+          val touched = SnapshotStore.touchedBuckets(incoming, Seq("user_id"))
+          val prevTouched = Scratch.checkpointLazy(
+            if (SnapshotStore.exists(snap))
+              SnapshotStore.readBuckets(spark, snap, touched)
+            else incoming.limit(0))
+          if (!new java.io.File(deltaPath).exists()) {
+            // old state of ONLY the touched keys: bucket-pruned dirs,
+            // then the keyed semi-join — at 100 TB the scan touches
+            // the batch's buckets, never the table
+            val keys = incoming.select(col("user_id")).distinct()
+            val old = prevTouched.join(keys, "user_id")
+            val newRows = old.unionByName(incoming)
               .withColumn("rn", row_number().over(latest))
               .filter(col("rn") === 1).drop("rn")
-            SnapshotStore.overwriteTouched(merged, Seq("user_id"), snap,
-              touched)
-            lastId = math.max(lastId, id)
-            ()
+            contrib(old, -1).unionByName(contrib(newRows, 1))
+              .groupBy(col("event_type"))
+              .agg(sum(col("w")).as("dc"),
+                sum(col("sv")).cast("decimal(38,0)").as("ds"))
+              .coalesce(1).write.mode("overwrite").parquet(deltaPath)
           }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        spark.read.parquet(s"$root/agg/v$lastId")
-          .select(col("event_type"), col("cnt").as("n"),
-            call_function("scaled_double", col("s"), lit(6)).as("sum_value"))
+          val delta = spark.read.parquet(deltaPath)
+          val prevAgg = (if (id > 0)
+            Some(spark.read.parquet(s"$root/agg/v${id - 1}")) else None)
+            .getOrElse(delta.limit(0)
+              .select(col("event_type"), col("dc").as("cnt"),
+                col("ds").as("s")))
+          val nextAgg = prevAgg.as("a")
+            .join(delta.as("d"), Seq("event_type"), "full_outer")
+            .select(col("event_type"),
+              (coalesce(col("cnt"), lit(0L))
+                + coalesce(col("dc"), lit(0L))).as("cnt"),
+              (coalesce(col("s"), lit(BigDecimal(0)).cast("decimal(38,0)"))
+                + coalesce(col("ds"), lit(BigDecimal(0)).cast("decimal(38,0)")))
+                .cast("decimal(38,0)").as("s"))
+            .filter(col("cnt") > 0)
+          nextAgg.write.mode("overwrite").parquet(s"$root/agg/v$id")
+          // snapshot advances by the bucketed partition-pruned merge,
+          // reusing the checkpointed touched-bucket read from above
+          val merged = prevTouched.unionByName(incoming)
+            .withColumn("rn", row_number().over(latest))
+            .filter(col("rn") === 1).drop("rn")
+          SnapshotStore.overwriteTouched(merged, Seq("user_id"), snap,
+            touched)
+          lastId = math.max(lastId, id)
       }
+      spark.read.parquet(s"$root/agg/v$lastId")
+        .select(col("event_type"), col("cnt").as("n"),
+          call_function("scaled_double", col("s"), lit(6)).as("sum_value"))
     },
 
     // ---- streaming file sink (K2: the production sink surface) fed from
@@ -1061,37 +1029,30 @@ object StreamQueries {
         |FROM documents""".stripMargin) { (spark, dir) =>
       val name = Streams.fresh("stream_split", dir)
       val base = s"${Streams.scratchRoot}/split/$name"
-      GraftQuery.withShufflePartitions(spark, 4) {
-        val src = Streams.stagedFileStream(spark,
+      Streams.drainStaged(spark,
           Tables(spark, dir).documents.select(col("doc_id"), col("text")),
-          name, files = 4)
-        val q = src.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            val cached = df.persist()
-            try {
-              cached.filter(length(col("text")) >= 200).select("doc_id")
-                .write.mode("append").parquet(s"$base/clean")
-              cached.filter(length(col("text")) < 200).select("doc_id")
-                .write.mode("append").parquet(s"$base/flagged")
-            } finally { cached.unpersist(); () }
-          }
-          .option("checkpointLocation", Streams.ckpt(name))
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        // a branch nothing matched was never written: read it back as the
-        // EMPTY branch (correct split result), not a path-missing crash
-        def branch(sub: String): DataFrame =
-          if (new java.io.File(s"$base/$sub").exists())
-            spark.read.parquet(s"$base/$sub")
-              .select(col("doc_id"), lit(sub).as("branch"))
-          else {
-            import spark.implicits._
-            spark.emptyDataset[Long].toDF("doc_id")
-              .select(col("doc_id"), lit(sub).as("branch"))
-          }
-        branch("clean").union(branch("flagged"))
+          name, files = 4, filesPerTrigger = 1, partitions = 4) {
+        (df: DataFrame, _: Long) =>
+          val cached = df.persist()
+          try {
+            cached.filter(length(col("text")) >= 200).select("doc_id")
+              .write.mode("append").parquet(s"$base/clean")
+            cached.filter(length(col("text")) < 200).select("doc_id")
+              .write.mode("append").parquet(s"$base/flagged")
+          } finally { cached.unpersist(); () }
       }
+      // a branch nothing matched was never written: read it back as the
+      // EMPTY branch (correct split result), not a path-missing crash
+      def branch(sub: String): DataFrame =
+        if (new java.io.File(s"$base/$sub").exists())
+          spark.read.parquet(s"$base/$sub")
+            .select(col("doc_id"), lit(sub).as("branch"))
+        else {
+          import spark.implicits._
+          spark.emptyDataset[Long].toDF("doc_id")
+            .select(col("doc_id"), lit(sub).as("branch"))
+        }
+      branch("clean").union(branch("flagged"))
     },
 
     // ---- stream-stream interval join (append mode): purchases joined to

@@ -78,7 +78,7 @@ object PartitionedStore {
     * O(tuples): one level → `c IN (…)`; deeper →
     * `OR_v (c1 = v AND <recurse over v's tuples>)`. `asString` compares
     * through a string cast (dir-name keys, the compaction path). */
-  private[streaming] def pruneExpr(partCols: Seq[String],
+  private[graft] def pruneExpr(partCols: Seq[String],
       touched: Seq[Seq[Any]], asString: Boolean = false): Column = {
     def c0 = if (asString) col(partCols.head).cast("string")
              else col(partCols.head)
@@ -161,7 +161,7 @@ object PartitionedStore {
         swapped += 1
       }
     }
-    if (swapped >= touched.size) rmTree(st)
+    if (swapped >= touched.size) removeTree(st)
   }
 
   /** Single-column form of [[replacePartitions]]. */
@@ -179,7 +179,7 @@ object PartitionedStore {
     *
     * `discardUncommitted = false` is the READ-path form (ADVICE r9): a
     * reader must still complete a COMMITTED delete (serving pre-delete
-    * content would resurrect deleted keys) but must never rmTree a
+    * content would resurrect deleted keys) but must never remove a
     * staging a live writer is still populating — an uncommitted staging
     * is invisible to Spark's listing (underscore prefix), so leaving it
     * in place costs the reader nothing. */
@@ -189,7 +189,7 @@ object PartitionedStore {
     if (!st.exists()) return
     val marker = new java.io.File(st, TOUCHED_MARKER)
     if (!marker.exists()) {
-      if (discardUncommitted) rmTree(st)
+      if (discardUncommitted) removeTree(st)
       return
     }
     val lines = java.nio.file.Files.readString(marker.toPath)
@@ -220,7 +220,7 @@ object PartitionedStore {
     rels.foreach { rel =>
       if (new java.io.File(st, rel).exists()) installStaged(path, st, rel)
     }
-    rmTree(st)
+    removeTree(st)
   }
 
   /** Rel paths of the staged partition LEAF dirs under `dir`: a leaf is
@@ -254,27 +254,20 @@ object PartitionedStore {
     val staged = new java.io.File(st, rel)
     val live = new java.io.File(path, rel)
     Option(live.getParentFile).foreach(_.mkdirs())
-    rmTree(live)
+    removeTree(live)
     require(staged.renameTo(live),
       s"staged-partition rename failed: $staged -> $live")
   }
 
-  private[streaming] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+  /** Remove a directory tree (a missing one is a no-op). Maintenance
+    * depends on it operationally: the ingest fold removes landed `bid=`
+    * dirs after their staged swap commits, and the stale-root sweep
+    * removes dead-pid index roots. */
+  def removeTree(f: java.io.File): Unit = {
+    // listFiles() is null (not empty) if the dir vanished or on I/O error
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(removeTree))
     f.delete(); ()
   }
-
-  /** Remove a directory tree. Public because maintenance passes depend
-    * on it operationally (the ingest fold removes landed `bid=` dirs
-    * after their staged swap commits; the stale-root sweep removes
-    * dead-pid index roots) — not merely a test convenience (ADVICE r10:
-    * the old `rmTreeForSpec` name invited weakening a production
-    * dependency). */
-  def removeTree(f: java.io.File): Unit = rmTree(f)
-
-  /** Spec-facing alias of [[removeTree]] (tests build throwaway layout
-    * copies). */
-  def rmTreeForSpec(f: java.io.File): Unit = removeTree(f)
 
   /** Recursive file copy — the restore-a-snapshot stand-in used by gates
     * that MUTATE a shared persisted layout (delete propagation, warm-

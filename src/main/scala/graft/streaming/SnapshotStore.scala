@@ -101,7 +101,7 @@ object SnapshotStore {
     * spec pins that a plain read finishes an interrupted delete) but —
     * unlike the write paths — never DISCARDS an uncommitted staging
     * (ADVICE r9: a reader racing an in-flight `deleteKeys` must not
-    * rmTree the writer's staging out from under it; uncommitted staging
+    * remove the writer's staging out from under it; uncommitted staging
     * is invisible to Spark's listing anyway). Completing committed
     * swaps still mutates the layout, so reads remain part of the
     * single-writer discipline: don't race a read against an in-flight

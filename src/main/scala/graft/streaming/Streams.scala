@@ -46,18 +46,12 @@ object Streams {
     Seq("src", "ckpt", "sink", "split", "cdc", "ivm", "cms", "embed",
         "graph").foreach { kind =>
       val root = new java.io.File(s"$scratchRoot/$kind/$name")
-      rmTree(root)
+      PartitionedStore.removeTree(root)
       // a silently failed wipe would RESUME the previous run's finished
       // checkpoint and emit nothing — fail loudly here instead
       require(!root.exists(), s"could not wipe scratch ${root.getPath}")
     }
     name
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    // listFiles() is null (not empty) if the dir vanished or on I/O error
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
   }
 
   /** Stage a batch DataFrame as `files` parquet part-files under a fresh
@@ -88,6 +82,23 @@ object Streams {
   def stagedFileStream(spark: SparkSession, df: DataFrame, name: String,
       files: Int, filesPerTrigger: Int = 1): DataFrame =
     fileStream(spark, stage(df, name, files), filesPerTrigger)
+
+  /** Stage `slice` as `files` source files and drain it through
+    * `onBatch` (`filesPerTrigger` files per micro-batch) under `name`'s
+    * checkpoint, with `partitions` shuffle partitions for the staging
+    * write and every trigger. Returns once all staged files are
+    * processed; the query is stopped even when a batch throws. */
+  def drainStaged(spark: SparkSession, slice: DataFrame, name: String,
+      files: Int, filesPerTrigger: Int, partitions: Int)(
+      onBatch: (DataFrame, Long) => Unit): Unit =
+    graft.queries.GraftQuery.withShufflePartitions(spark, partitions) {
+      val q = stagedFileStream(spark, slice, name, files, filesPerTrigger)
+        .writeStream.queryName(name)
+        .option("checkpointLocation", ckpt(name))
+        .foreachBatch(onBatch)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
 
   /** The WordCount pipeline (the reference's single executable spec,
     * `WordCount.java:14-35`: fromElements → flatMap → filter → keyBy →

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ann.{IndexLayout, Maintenance}
 import graft.streaming.PartitionedStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -104,7 +105,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .as[Long].collect().toSet.filterNot(_ % 10 == 3)
     assert(gotIds == wantIds,
       s"post-delete ids diverge: missing=${(wantIds -- gotIds).take(5)} extra=${(gotIds -- wantIds).take(5)}")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("index delete: a crash mid-swap on the cell layout recovers to the exact set difference") {
@@ -131,7 +132,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .as[Long].collect().toSet.filterNot(_ % 10 == 3)
     assert(gotIds == wantIds, "crash-point recovery diverged from set difference")
     assert(!new java.io.File(s"$cells/_graft_staging_delete").exists())
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("index compaction: 3 upsert waves accumulate files, compact folds only over-bound cells, content identical") {
@@ -167,7 +168,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(gotContent == wantContent, "compaction changed index content")
     // idempotent
     assert(PartitionedStore.compact(spark, cells, "cent_id", 1).isEmpty)
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("q_sim_index_compact serve rows equal q_sim_index_upsert's (same corpus, different physical history)") {
@@ -235,7 +236,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       "no streamed vector ever queried the index")
     assert(rows.exists(_.getLong(1) % 10 == 9),
       "no streamed vector was retrieved as a neighbor")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("warm-start retrain: only changed-membership cells rewritten; layout equals the new assignment exactly") {
@@ -275,7 +276,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(movedN > 0)
     // the v2 centroid table landed beside the frozen one
     assert(new java.io.File(s"$root/centroids_v2").exists())
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("ingest fold: bid= generations merge into cells via staged swap; crash-retry converges without duplicates") {
@@ -299,7 +300,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     val want = content(rootA).toSet
     val before = fileState(s"$rootA/cells")
     // clean fold
-    val touched = Q.foldIngest(spark, rootA).map(_.toString).toSet
+    val touched = IndexLayout.Cells.fold(spark, rootA).map(_.toString).toSet
     assert(touched.nonEmpty, "fold touched no cells — no streamed rows?")
     assert(!new java.io.File(s"$rootA/ingest").exists(),
       "ingest dirs survived a completed fold")
@@ -313,10 +314,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(unBefore == unAfter, "fold rewrote a cell with no landed rows")
     // crash after ONE swap: staging committed, ingest still present;
     // a re-run must converge to the identical keyed content
-    Q.foldIngest(spark, rootB, crashAfterSwaps = 1)
+    IndexLayout.Cells.fold(spark, rootB, crashAfterSwaps = 1)
     assert(new java.io.File(s"$rootB/cells/_graft_staging_delete").exists(),
       "crash injection left no staging")
-    Q.foldIngest(spark, rootB)
+    IndexLayout.Cells.fold(spark, rootB)
     val gotB = content(rootB)
     assert(gotB.size == gotB.distinct.size,
       "crash-retry fold duplicated rows (keyed merge broken)")
@@ -329,7 +330,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .collect().map(_.toSeq).toSet
     assert(a == b, "folded serve diverges from union serve")
     Seq(rootA, rootB).foreach(r =>
-      PartitionedStore.rmTreeForSpec(new java.io.File(r)))
+      PartitionedStore.removeTree(new java.io.File(r)))
   }
 
   test("q_sim_index_delete: deleted vectors retrievable from NO serve path, and were retrievable before") {
@@ -404,7 +405,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       "two-level crash-point recovery diverged from set difference")
     assert(!new java.io.File(s"$rootB/cells/_graft_staging_delete").exists())
     Seq(rootA, rootB).foreach(r =>
-      PartitionedStore.rmTreeForSpec(new java.io.File(r)))
+      PartitionedStore.removeTree(new java.io.File(r)))
   }
 
   test("q_sim_index_delete_all: deleted vectors retrievable from NONE of the five persisted serve paths") {
@@ -447,7 +448,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // what the signals triggered; the post-read certifies the repairs
     assert(post.pendingGens == 0, s"fold left pending generations: $post")
     assert(post.overBound.isEmpty, s"file bound violated post-repair: $post")
-    assert(post.imbalance <= Q.PLANNER_IMBALANCE_MAX)
+    assert(post.imbalance <= Maintenance.PLANNER_IMBALANCE_MAX)
     assert(post.actions.isEmpty, s"planner did not converge: ${post.actions}")
     assert(!new java.io.File(s"$root/ingest").exists(),
       "ingest dirs survived the planned fold")
@@ -483,13 +484,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
         }
     }
     val n0 = spark.read.parquet(s"$root/cells").count()
-    val pre = Q.planMaintenance(spark, root)
+    val pre = Maintenance.plan(spark, root)
     info(s"corrupted: imbalance=${pre.imbalance} actions=${pre.actions.mkString(",")}")
     assert(pre.retrain,
       s"corruption did not trip the retrain dial: imbalance=${pre.imbalance}")
     assert(!pre.fold, "no ingest exists — fold must not trigger")
-    Q.runMaintenance(spark, dir01, root, pre)
-    val post = Q.planMaintenance(spark, root)
+    Maintenance.run(spark, dir01, root, pre)
+    val post = Maintenance.plan(spark, root)
     info(s"repaired: imbalance=${post.imbalance}")
     assert(post.imbalance < pre.imbalance,
       s"retrain did not reduce imbalance: ${pre.imbalance} -> ${post.imbalance}")
@@ -497,7 +498,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       s"post-repair imbalance still over the dial: ${post.imbalance}")
     // repair moved rows between cells, never lost or invented any
     assert(spark.read.parquet(s"$root/cells").count() == n0)
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("streaming serve: a crashed fold between serve reads never changes results (read-path recovery)") {
@@ -509,7 +510,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // one serve read = what a streaming-serve micro-batch does: the
     // crash-consistent keyed read, then the pruned probe
     def serveAll(): Set[Seq[Any]] = {
-      val all = Q.readIndexCells(spark, root)
+      val all = IndexLayout.Cells.read(spark, root)
       val probes = all.filter(col("vec_id") % 25 === 19)
         .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
           col("embedding").as("qemb"), col("norm2").as("qnorm2"))
@@ -520,7 +521,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(before.nonEmpty)
     // maintenance crashes mid-fold: staging COMMITTED but only one swap
     // done, ingest dirs still present — the worst read-side moment
-    Q.foldIngest(spark, root, crashAfterSwaps = 1)
+    IndexLayout.Cells.fold(spark, root, crashAfterSwaps = 1)
     assert(new java.io.File(
       s"$root/cells/_graft_staging_delete/_graft_touched").exists(),
       "crash injection left no committed staging")
@@ -530,10 +531,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(!new java.io.File(s"$root/cells/_graft_staging_delete").exists(),
       "read path did not complete the committed staging")
     // the fold retry converges; the post-fold serve is still identical
-    Q.foldIngest(spark, root)
+    IndexLayout.Cells.fold(spark, root)
     assert(!new java.io.File(s"$root/ingest").exists())
     assert(serveAll() == before, "post-fold serve diverged")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("PQ-encode-on-ingest: streamed codes equal a from-scratch batch encode against the same codebook") {
@@ -588,15 +589,14 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // the planner OBSERVES the codes tier: pending generations trigger
     // the fold; the retrain dial is structurally off (re-clustering
     // would invalidate every stored code)
-    val pre = Q.planCodesMaintenance(spark, root)
+    val pre = Maintenance.plan(spark, root, IndexLayout.Codes)
     info(s"pre=$pre -> actions=${pre.actions.mkString(",")}")
     assert(pre.pendingGens >= 2 && pre.fold,
       s"scenario lost its pending code generations: $pre")
     assert(!pre.retrain && pre.imbalance == 0.0,
       s"codes tier must never trip the retrain dial: $pre")
     val before = fileState(s"$root/codes")
-    val touched = Q.foldIngest(spark, root,
-        cellsSub = "codes", ingestSub = "codes_ingest")
+    val touched = IndexLayout.Codes.fold(spark, root)
       .map(_.toString).toSet
     assert(touched.nonEmpty, "fold touched no code cells")
     assert(!new java.io.File(s"$root/codes_ingest").exists(),
@@ -612,10 +612,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       "codes fold lost, invented, or duplicated code rows")
     // planner convergence: fold satisfied; any residual file-bound wear
     // is compact's job, after which all signals read healthy
-    val mid = Q.planCodesMaintenance(spark, root)
+    val mid = Maintenance.plan(spark, root, IndexLayout.Codes)
     assert(!mid.fold, s"fold signal survived the fold: $mid")
-    Q.runCodesMaintenance(spark, root, mid)
-    val post = Q.planCodesMaintenance(spark, root)
+    Maintenance.run(spark, sfDir, root, mid)
+    val post = Maintenance.plan(spark, root, IndexLayout.Codes)
     assert(post.actions.isEmpty, s"codes planner did not converge: $post")
     // gate level: the folded serve is row-identical to the union serve
     val a = SparkEntry.queries("q_stream_index_pq_fold")(spark, sfDir)
@@ -624,20 +624,25 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .collect().map(_.toSeq).toSet
     assert(a == b,
       s"folded PQ serve diverges from union serve: only-fold=${(a -- b).take(3)} only-union=${(b -- a).take(3)}")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
-  test("planner on empty/missing layouts: all signals read healthy instead of throwing") {
-    val ghost = s"/tmp/graft-idxmaint-ghost-${System.nanoTime()}"
-    val plan = Q.planMaintenance(spark, ghost)
-    assert(plan.actions.isEmpty && plan.imbalance == 0.0,
-      s"missing layout must plan 'nothing': $plan")
-    // fully-deleted cells layout: dirs exist, zero parquet files
-    new java.io.File(s"$ghost/cells/cent_id=0").mkdirs()
-    val plan2 = Q.planMaintenance(spark, ghost)
-    assert(plan2.actions.isEmpty && plan2.imbalance == 0.0,
-      s"emptied layout must plan 'nothing': $plan2")
-    PartitionedStore.rmTreeForSpec(new java.io.File(ghost))
+  // one case per cell layout, all through the shared planner
+  Seq(IndexLayout.Cells -> "", IndexLayout.Filtered -> " (filtered layout)",
+      IndexLayout.Codes -> " (codes layout)").foreach { case (layout, which) =>
+    test(s"planner on empty/missing layouts: all signals read healthy instead of throwing$which") {
+      val ghost = s"/tmp/graft-idxmaint-ghost-${System.nanoTime()}"
+      val plan = Maintenance.plan(spark, ghost, layout)
+      assert(plan.actions.isEmpty && plan.imbalance == 0.0,
+        s"missing layout must plan 'nothing': $plan")
+      // fully-deleted layout: leaf dirs exist, zero parquet files
+      new java.io.File(layout.basePath(ghost) + "/" +
+        layout.partCols.map(c => s"$c=0").mkString("/")).mkdirs()
+      val plan2 = Maintenance.plan(spark, ghost, layout)
+      assert(plan2.actions.isEmpty && plan2.imbalance == 0.0,
+        s"emptied layout must plan 'nothing': $plan2")
+      PartitionedStore.removeTree(new java.io.File(ghost))
+    }
   }
 
   test("streaming serve × concurrent maintenance: a committed mid-stream fold crash is invisible to served batches") {
@@ -703,7 +708,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(rounds == trace.result(),
       s"gate trace ${rounds} diverges from hand-driven rounds ${trace.result()}")
     assert(rounds.head._2 > 0, "round 1 moved nothing — retrain2 gate proves nothing")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("filtered prune is batched per label: one disjunct per distinct label, O(labels) plan size") {
@@ -740,7 +745,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // decisions: pending generations -> fold; disjoint split leaves ->
     // compact; imbalance is observability only (no retrain action on
     // the filtered tier — centroids are shared across labels)
-    val pre = Q.planFilteredMaintenance(spark, root)
+    val pre = Maintenance.plan(spark, root, IndexLayout.Filtered)
     info(s"pre=$pre -> actions=${pre.actions.mkString(",")}")
     assert(pre.pendingGens == 2 && pre.fold,
       s"scenario lost its pending generations: $pre")
@@ -753,12 +758,12 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .select("vec_id").distinct().count()
     // fold with an injected crash after ONE swap: committed staging,
     // ingest still present — the retry completes and converges
-    val touched1 = Q.foldFilteredIngest(spark, root, crashAfterSwaps = 1)
+    val touched1 = IndexLayout.Filtered.fold(spark, root, crashAfterSwaps = 1)
     assert(touched1.nonEmpty, "crashed fold reported no touched leaves")
     assert(new java.io.File(s"$root/ingest").exists(),
       "crashed fold must leave the landed generations in place")
     val before = fileState(s"$root/cells")
-    val touched = Q.foldFilteredIngest(spark, root)
+    val touched = IndexLayout.Filtered.fold(spark, root)
     assert(touched.nonEmpty, "fold retry touched no leaves")
     assert(!new java.io.File(s"$root/ingest").exists(),
       "ingest dirs survived a completed fold")
@@ -782,14 +787,14 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(cells.select("vec_id").distinct().count() == want,
       "fold lost or invented rows")
     // compact repairs the file bound; planner converges to nothing
-    val mid = Q.planFilteredMaintenance(spark, root)
+    val mid = Maintenance.plan(spark, root, IndexLayout.Filtered)
     assert(!mid.fold, s"fold signal survived the fold: $mid")
-    Q.runFilteredMaintenance(spark, root, mid)
-    val post = Q.planFilteredMaintenance(spark, root)
+    Maintenance.run(spark, sfDir, root, mid)
+    val post = Maintenance.plan(spark, root, IndexLayout.Filtered)
     assert(post.actions.isEmpty, s"filtered planner did not converge: $post")
-    assert(post.maxImbalance > 0.0 && post.maxImbalance < Q.PLANNER_IMBALANCE_MAX,
+    assert(post.imbalance > 0.0 && post.imbalance < Maintenance.PLANNER_IMBALANCE_MAX,
       s"per-label imbalance should read healthy on real data: $post")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("streaming graph upsert: redelivery idempotent; planner folds landed generations via staged swaps; serve invariant") {
@@ -824,17 +829,17 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(rowSet(s"$root/ingest_nodes") == nodesBefore,
       "redelivered batch changed the landed payload content")
     // planner observes the pending generations
-    val pre = Qs.planGraphMaintenance(spark, root)
+    val pre = Maintenance.planGraph(spark, root)
     info(s"pre=$pre -> actions=${pre.actions.mkString(",")}")
     assert(pre.pendingGens == 2 && pre.fold,
       s"planner missed the landed generations: $pre")
     // fold with an injected crash after ONE adj swap: committed
     // staging + landed dirs still present; the retry converges
-    Qs.foldGraphIngest(spark, root, crashAfterSwaps = 1)
+    Maintenance.foldGraph(spark, root, crashAfterSwaps = 1)
     assert(new java.io.File(s"$root/ingest_adj").exists(),
       "crashed fold must leave the landed generations in place")
     val before = fileState(s"$root/adj")
-    val touched = Qs.foldGraphIngest(spark, root).map(_.toString).toSet
+    val touched = Maintenance.foldGraph(spark, root).map(_.toString).toSet
     assert(touched.nonEmpty, "fold retry touched no buckets")
     assert(!new java.io.File(s"$root/ingest_adj").exists()
       && !new java.io.File(s"$root/ingest_nodes").exists(),
@@ -850,14 +855,14 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // the fold is invisible to the serve
     assert(serve() == preFold, "fold changed served rows")
     // planner converges (any residual file wear is compact's job)
-    val mid = Qs.planGraphMaintenance(spark, root)
+    val mid = Maintenance.planGraph(spark, root)
     assert(!mid.fold, s"fold signal survived the fold: $mid")
-    Qs.runGraphMaintenance(spark, root, mid)
-    val post = Qs.planGraphMaintenance(spark, root)
+    Maintenance.runGraph(spark, root, mid)
+    val post = Maintenance.planGraph(spark, root)
     assert(!post.fold && !post.compact,
       s"graph planner did not converge: $post")
     assert(serve() == preFold, "maintenance changed served rows")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("HNSW delete + repair: payload and both edge directions gone; dead-hub cells re-elected and re-meshed") {
@@ -946,7 +951,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .select("query_id", "neighbor_id").collect()
     assert(rows.exists(_.getLong(0) % 10 == 9), "no arrival ever queried the graph")
     assert(rows.exists(_.getLong(1) % 10 == 9), "no arrival was retrieved as a neighbor")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("graph repair: planner reads real wear; repair restores the degree bound, entries, and file bound") {
@@ -989,13 +994,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     import graft.streaming.PartitionedStore
     val root = s"/tmp/graft-idxmaint-ghealthy-${System.nanoTime()}"
     Q.buildBaseHnswIndex(spark, sfDir, root)
-    val plan = Q.planGraphMaintenance(spark, root)
+    val plan = Maintenance.planGraph(spark, root)
     info(s"healthy plan=$plan")
     assert(plan.degraded == 0,
       s"pristine graph reports degraded neighborhoods: $plan")
     assert(plan.deadHubs == 0, s"pristine graph reports dead hubs: $plan")
     assert(!plan.repair, s"planner taxes a healthy graph: $plan")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("streaming graph serve: micro-batched beam results equal the batch beam serve") {
@@ -1050,9 +1055,9 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     val v = Q.vectorsForSpec(spark, sfDir)
     Q.buildHierHnswIndex(spark, v, root)
     // a pristine hier layout plans nothing — neither tier
-    assert(!Q.planGraphMaintenance(spark, root).hier,
+    assert(!Maintenance.planGraph(spark, root).hier,
       "pristine hier layout reports layer staleness")
-    assert(Q.planHierMaintenance(spark, root).actions.isEmpty,
+    assert(Maintenance.planHier(spark, root).actions.isEmpty,
       "pristine hier layout plans layer work")
     val buckets = spark.read.parquet(s"$root/centroids").count()
     val es = math.ceil(math.sqrt(buckets.toDouble)).toLong
@@ -1070,9 +1075,9 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       v.filter(col("vec_id") =!= victimHub), buckets)
     // the graph planner surfaces the combined staleness; the hier
     // planner splits it into the refresh decision with the exact cell
-    assert(Q.planGraphMaintenance(spark, root).hier,
+    assert(Maintenance.planGraph(spark, root).hier,
       "graph planner missed the layer staleness")
-    val plan = Q.planHierMaintenance(spark, root)
+    val plan = Maintenance.planHier(spark, root)
     info(s"post-wear hier plan=$plan")
     assert(plan.refresh && !plan.reelect,
       s"non-entry hub death must trigger refresh, not reelect: $plan")
@@ -1105,12 +1110,12 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(layerRows(root) == layerRows(rebuilt),
       "refresh diverged from the wholesale layer rebuild")
     // converged: neither planner sees residual layer work
-    assert(Q.planHierMaintenance(spark, root).actions.isEmpty,
+    assert(Maintenance.planHier(spark, root).actions.isEmpty,
       "hier planner did not converge after refresh")
-    assert(!Q.planGraphMaintenance(spark, root).hier,
+    assert(!Maintenance.planGraph(spark, root).hier,
       "graph planner still reports layer staleness after refresh")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
-    PartitionedStore.rmTreeForSpec(new java.io.File(rebuilt))
+    PartitionedStore.removeTree(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(rebuilt))
   }
 
   test("hier layer maintenance: entry-hub death -> reelect rebuilds both layer tables onto live identities") {
@@ -1129,13 +1134,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     Q.deleteHnswNodes(spark, root, del, buckets)
     Q.repairDeadHubs(spark, root, del,
       v.filter(col("vec_id") =!= deadEntryHub), buckets)
-    val plan = Q.planHierMaintenance(spark, root)
+    val plan = Maintenance.planHier(spark, root)
     info(s"post-wear hier plan=$plan")
     assert(plan.reelect,
       s"entry-hub death must trigger reelect: $plan")
     Q.reelectHierEntries(spark, root)
     // converged, and no stored identity references the dead hub
-    assert(Q.planHierMaintenance(spark, root).actions.isEmpty,
+    assert(Maintenance.planHier(spark, root).actions.isEmpty,
       "hier planner did not converge after reelect")
     assert(spark.read.parquet(s"$root/entryhubs")
       .filter(col("ehub") === deadEntryHub).count() == 0,
@@ -1149,7 +1154,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
         v.filter(col("vec_id") % 50 === 0), beamWidth = 8)
     }
     assert(served.count() > 0, "hier serve over the reelected layer is empty")
-    PartitionedStore.rmTreeForSpec(new java.io.File(root))
+    PartitionedStore.removeTree(new java.io.File(root))
   }
 
   test("graph-tier label contract (r13 ADVICE): every node-payload generation carries a non-null label") {
@@ -1162,7 +1167,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(landed.filter(col("label").isNull).count() == 0,
       "a landed arrival has a null label — filtered serve would drop it")
     // the combined base ∪ landed view the filtered serve actually reads
-    assert(Q.graphNodes(spark, upRoot).filter(col("label").isNull)
+    assert(IndexLayout.Nodes.union(spark, upRoot).filter(col("label").isNull)
       .count() == 0, "base ∪ landed payload view has null labels")
     // and the filtered serve over the upserted layout runs end to end
     val served = graft.queries.GraftQuery.withShufflePartitions(spark, 8) {
@@ -1182,7 +1187,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(!new java.io.File(s"$root/ingest_adj").exists()
       && !new java.io.File(s"$root/ingest_nodes").exists(),
       "fold left landed generations behind")
-    val hp = Q.planHierMaintenance(spark, root)
+    val hp = Maintenance.planHier(spark, root)
     assert(hp.entryChanged == 0 && hp.staleCells.isEmpty,
       s"runner left the hier layers stale: $hp")
     // the serve proves the lifecycle end to end: no deleted vector
